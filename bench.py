@@ -262,7 +262,7 @@ def _serving_ops(spark, sf_dir):
         if not out.get("statements"):
             raise AssertionError("REST statement page came back empty")
         # gate on the EVIDENCE table's prune specifically (get_statements
-        # prunes several tables per request; last_prune would show the
+        # prunes several tables per request; the log's last entry is the
         # final one — the rid fetch — whose single-file fixture layout
         # can legitimately read 1/1)
         hits = [

@@ -167,10 +167,11 @@ def algebra_txlog_hash_lookup(spark, sf):
         extra={t: sm.limit(0) for t in CORE_TABLES if t != "source_meta"},
     )
     keys = [1, 7, 77, 777, 1337]
+    lake.prune_log.clear()
     out = HasHash(keys).hashes(lake)
-    if lake.last_prune is None:
+    if not lake.prune_log:
         raise AssertionError("HasHash did not route through skip_read")
-    files_read, files_total = lake.last_prune
+    _, files_read, files_total = lake.prune_log[-1]
     if not files_read < files_total:
         raise AssertionError(
             f"manifest bloom prune did not engage: read {files_read} of "
@@ -224,10 +225,11 @@ def algebra_txlog_mesh_lookup(spark, sf):
             if t != "mesh_term_meta"
         },
     )
+    lake.prune_log.clear()
     out = FromMeshIds(["D5", "D17"]).hashes(lake)
-    if lake.last_prune is None:
+    if not lake.prune_log:
         raise AssertionError("FromMeshIds did not route through skip_read")
-    files_read, files_total = lake.last_prune
+    _, files_read, files_total = lake.prune_log[-1]
     if not files_read < files_total:
         raise AssertionError(
             f"manifest bloom prune did not engage: read {files_read} of "
@@ -311,12 +313,13 @@ def serving_statement_page(spark, sf):
         },
     )
     page = [1, 7, 77, 777, 1337]
+    lake.prune_log.clear()
     out = get_evidence_page(lake, page, ev_limit=3)
-    if lake.last_prune is None:
+    if not lake.prune_log:
         raise AssertionError(
             "statement-page evidence fetch did not route through skip_read"
         )
-    files_read, files_total = lake.last_prune
+    _, files_read, files_total = lake.prune_log[-1]
     if not files_read < files_total:
         raise AssertionError(
             f"manifest bloom prune did not engage: read {files_read} of "

@@ -44,14 +44,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from indra_db_spark.session import local_artifact_df
+
 #: quantization: milli units, shifted non-negative
 SCALE = 1_000
 OFFSET = 4_096
-
-# local_artifact_df moved to indra_db_spark.session (round 14: every
-# package that builds driver-side row-list frames now routes through it,
-# not just the PQ artifact frames); re-exported here for its r13 callers.
-from indra_db_spark.session import local_artifact_df  # noqa: F401
 
 
 def _quant_lambda_sql(scale: int, offset: int) -> str:

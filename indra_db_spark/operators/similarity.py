@@ -468,7 +468,7 @@ def cosine_neardup_cells(
         # (volume tracks output density plus pruning slack), the Arrow
         # prefilter collapses them to survivors before any pair pays the
         # interpreted JVM sim
-        from indra_db_spark.operators.pq import local_artifact_df
+        from indra_db_spark.session import local_artifact_df
 
         pairs_df = local_artifact_df(spark, cand, "cell_a INT, cell_b INT")
         a = assigned.select(
@@ -618,7 +618,7 @@ def cosine_neardup_imi(
         f"id_a {id_type}, id_b {id_type}, sim double"
     )
     if first is None:
-        from indra_db_spark.operators.pq import local_artifact_df
+        from indra_db_spark.session import local_artifact_df
 
         return local_artifact_df(spark, [], empty_schema)
     dim = int(first["d"])

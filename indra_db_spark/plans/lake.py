@@ -2,6 +2,11 @@
 materialized ``readonly`` Postgres schema (SURVEY.md §1.4).
 
 Holds one DataFrame per readonly table and serves them to the query algebra.
+Every leaf scan that narrows a table by box or point predicates reads
+through :meth:`ReadonlyLake.pruned`, which alone decides how the table is
+physically served (manifest-pruned txlog read, broadcast semi-join, or the
+filtered plain frame); callers never branch on it.
+
 At scale: each table is a partitioned/bucketed Parquet dataset; the three
 agent-meta tables (name/text/other) are the reference's skew-busting
 partition of pa_meta by namespace (readonly_schema.py:991-1021) and keep
@@ -25,6 +30,48 @@ def _dir_bytes(spark: SparkSession, path: str) -> int:
     return fsutil.dir_bytes(spark, path)
 
 
+#: longest eq list :meth:`ReadonlyLake.pruned` probes through the txlog
+#: manifest; a longer one takes a broadcast semi-join instead.  Every
+#: input the REST service produces stays under it: statement pages are
+#: ≤ MAX_STMTS (500) hashes and their text-ref fetch ≤ page × ev_limit
+#: reading ids (5000 at the default ev_limit of 10).  Past it, the
+#: residual ``isin`` costs seconds of py4j marshalling and an eq probe
+#: over that many keys admits nearly every file anyway.
+PRUNE_KEYS_MAX = 10_000
+
+
+def _txlog_handle(
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    timestamp_ms: int | None = None,
+) -> tuple | None:
+    """(TxTable, pinned version) of the transaction-logged table at
+    ``path`` — ``timestamp_ms`` resolves ``AS OF``, else ``version``,
+    else the head — or None when the log serves no data there: no log
+    directory, zero commits (a writer created the dirs and crashed
+    before its first commit), or a CONFIG-ONLY pinned version
+    (set_stats_columns / add_check_constraint committed before the
+    first append, or a data-less restore target).  None means "does not
+    exist yet", never an error that bricks a whole lake open.  The pin
+    makes the lake's frame and every later :meth:`ReadonlyLake.pruned`
+    scan read the same snapshot even when a writer commits in
+    between."""
+    from indra_db_spark.plans.txlog import LOG_DIR, TxTable
+
+    if not fsutil.is_dir(spark, fsutil.join(path, LOG_DIR)):
+        return None
+    tx = TxTable(spark, path)
+    head, head_files = tx.snapshot()  # ONE resolution per table
+    if head == 0:
+        return None
+    v = tx.version_at(timestamp_ms) if timestamp_ms is not None else version
+    if v is None:
+        v = head
+    files = head_files if v == head else tx._read_version(v)["files"]
+    return (tx, v) if files else None
+
+
 #: tables every lake must provide for the query algebra
 CORE_TABLES = (
     "name_meta",
@@ -46,14 +93,11 @@ class ReadonlyLake:
         # from_txlog/open): lets leaf scans route through manifest-stats
         # pruning (TxTable.skip_read) — {name: (TxTable, pinned version)}
         self._tx: dict[str, tuple] = {}
-        # (files_read, files_total) of the last pruned scan, for tests
-        # and entries asserting the prune ENGAGED
-        self.last_prune: tuple[int, int] | None = None
-        # rolling (table, files_read, files_total) log of recent pruned
-        # scans (r13): multi-scan call paths like get_statements prune
-        # several tables per request, and a gate that can only see the
-        # LAST one asserts the wrong table.  Bounded so a long-lived
-        # serving process never grows it.
+        # rolling (table, files_read, files_total) log of recent
+        # manifest-pruned scans, for tests and entries asserting the
+        # prune ENGAGED: multi-scan call paths like get_statements prune
+        # several tables per request.  Bounded so a long-lived serving
+        # process never grows it.
         from collections import deque
 
         self.prune_log: "deque[tuple[str, int, int]]" = deque(maxlen=32)
@@ -221,43 +265,17 @@ class ReadonlyLake:
         thread."""
         from concurrent.futures import ThreadPoolExecutor
 
-        from indra_db_spark.plans.txlog import LOG_DIR, TxTable
-
         tables: dict[str, DataFrame] = dict(extra or {})
         handles: dict[str, tuple] = {}
 
         def _resolve(name: str):
-            path = fsutil.join(root, name)
-            if not fsutil.is_dir(spark, fsutil.join(path, LOG_DIR)):
-                return None
-            tx = TxTable(spark, path)
-            head, head_files = tx.snapshot()  # ONE resolution per table
-            if head == 0:
-                # a writer created the table dirs and crashed before its
-                # first commit: nothing is committed, so the table does
-                # not exist yet — skip it rather than brick the whole
-                # lake open on one empty log
-                return None
-            if timestamp_ms is not None:
-                v = tx.version_at(timestamp_ms)
-            elif isinstance(version, dict):
-                v = version.get(name)
-            else:
-                v = version
-            if v is None:
-                # the lake's frame and any later pruned() scan must read
-                # the same snapshot even when a writer commits in between
-                v = head
-            if not (
-                head_files if v == head else tx._read_version(v)["files"]
-            ):
-                # a CONFIG-ONLY version (set_stats_columns /
-                # add_check_constraint committed before the first append,
-                # or a data-less restore target): the table holds no
-                # data yet — same not-yet-existing contract as head == 0,
-                # never a ValueError that bricks the whole lake open
-                return None
-            return name, tx, v
+            handle = _txlog_handle(
+                spark,
+                fsutil.join(root, name),
+                version.get(name) if isinstance(version, dict) else version,
+                timestamp_ms,
+            )
+            return handle and (name, *handle)
 
         with ThreadPoolExecutor(max_workers=8) as ex:
             resolved = [
@@ -275,44 +293,67 @@ class ReadonlyLake:
         name: str,
         predicates: dict | None = None,
         eq: dict | None = None,
-    ) -> DataFrame | None:
-        """A manifest-pruned scan of table ``name`` with the given box /
-        point predicates ALREADY applied (exactly), or None when the
-        table is not served through a transaction log — the caller then
-        falls back to filtering the plain scan.
+    ) -> DataFrame:
+        """Table ``name`` with the given box predicates (``{col: (lo,
+        hi)}``, a None edge open) and point predicates (``{col: value or
+        IN-list}``) applied EXACTLY — every leaf scan of the query
+        algebra and of result shaping reads through here, so how a table
+        is physically served is decided in this one place:
 
-        This is the btree-replacement story end to end: the reference
-        answers HasHash/HasEvidenceBound through clustered mk_hash /
-        ev_count btrees (readonly_schema.py:635-637); a txlog-served
-        lake answers them through :meth:`TxTable.skip_read` — manifest
-        range stats + bloom words decide per FILE, driver-side, before
-        any scan task launches, honoring the lake's pinned version.
-        ``self.last_prune`` records (files_read, files_total) of the
-        most recent pruned scan so callers/tests can assert engagement —
-        and is RESET to None first, so a query that takes the plain path
-        can never leave a previous scan's stale tuple behind (r11 ADVICE
-        #4).  Correctness never depends on the stats (unknown files are
-        always read; the residual filter is exact)."""
-        from indra_db_spark.plans.txlog import NoCommittedData
+        - a txlog-served table probed with at most
+          :data:`PRUNE_KEYS_MAX` keys per eq column →
+          :meth:`TxTable.skip_read`: manifest range stats + bloom words
+          decide per FILE, driver-side, before any scan task launches,
+          honoring the lake's pinned version (the reference answers the
+          same leaves through its clustered mk_hash / ev_count / agent-id
+          btrees, readonly_schema.py:635-637).  Each such scan appends
+          (name, files_read, files_total) to :attr:`prune_log`;
+        - a longer eq list → a broadcast semi-join against a driver-built
+          key frame (probing that many keys would admit every file
+          anyway and burn the driver-side probe budget doing it);
+        - a table with no txlog, or an empty eq list → the plain frame,
+          filtered;
+        - neither predicates nor eq → the plain frame.
 
-        self.last_prune = None
+        Correctness never depends on the stats: the residual filter
+        (:func:`plans.txlog.residual_filter`) is the same on every
+        path."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        from indra_db_spark.plans.txlog import (
+            NoCommittedData,
+            eq_lists,
+            residual_filter,
+        )
+        from indra_db_spark.session import local_artifact_df
+
+        boxes, eqs = dict(predicates or {}), eq_lists(eq)
+        df = self._tables[name]
+        if not boxes and not eqs:
+            return df
         handle = self._tx.get(name)
-        if handle is None:
-            return None
-        tx, pinned = handle
-        try:
-            df, files_read, files_total = tx.skip_read(
-                predicates=predicates, eq=eq, version=pinned
+        if handle is not None and all(
+            0 < len(v) <= PRUNE_KEYS_MAX for v in eqs.values()
+        ):
+            tx, pinned = handle
+            try:
+                out, files_read, files_total = tx.skip_read(
+                    predicates=boxes, eq=eqs, version=pinned
+                )
+            except NoCommittedData:
+                pass  # nothing committed at the pin: the plain path below
+            else:
+                self.prune_log.append((name, files_read, files_total))
+                return out
+        for c in [c for c, v in eqs.items() if len(v) > PRUNE_KEYS_MAX]:
+            keys = local_artifact_df(
+                self.spark,
+                [(v,) for v in eqs.pop(c)],
+                StructType([df.schema[c]]),
             )
-        except NoCommittedData:
-            # ONLY the empty-table case falls back to the plain path;
-            # misuse errors (empty eq-list, no boxes at all) propagate —
-            # swallowing them would silently degrade to a full scan
-            # (r11 ADVICE #1)
-            return None
-        self.last_prune = (files_read, files_total)
-        self.prune_log.append((name, files_read, files_total))
-        return df
+            df = df.join(F.broadcast(keys), c, "left_semi")
+        return df.filter(residual_filter(boxes, eqs))
 
     # ---- layout chooser (r7 verdict #7) ----------------------------------
 
@@ -357,8 +398,6 @@ class ReadonlyLake:
         """
         from pyspark.errors import AnalysisException
 
-        from indra_db_spark.plans.txlog import LOG_DIR
-
         tables: dict[str, DataFrame] = dict(extra or {})
         handles: dict[str, tuple] = {}
         pinned = version is not None or timestamp_ms is not None
@@ -387,28 +426,17 @@ class ReadonlyLake:
         def _decide(name: str):
             if name in tables:
                 return None
-            tx_path = tx_root and fsutil.join(tx_root, name)
             plain_path = root and fsutil.join(root, name)
             has_plain = bool(plain_path) and fsutil.exists(
                 spark, plain_path
             )
-            if tx_path and fsutil.is_dir(
-                spark, fsutil.join(tx_path, LOG_DIR)
-            ):
-                from indra_db_spark.plans.txlog import TxTable
-
-                tx = TxTable(spark, tx_path)
-                v, v_files = tx.snapshot()
-                if v > 0 and v_files:
-                    # pin the resolved version so the frame and any later
-                    # pruned() scan share one snapshot.  A config-only
-                    # head (stats/constraint commit before the first
-                    # append) holds no data — fall through to the other
-                    # layouts like the zero-commit case
-                    return name, "txlog", (tx, v)
-                # zero commits = the table doesn't exist in the log yet
-                # (crashed pre-first-commit writer) — fall through to the
-                # other layouts instead of bricking the open
+            # a table the log does not serve (no log, zero commits, or a
+            # config-only head) falls through to the other layouts
+            handle = tx_root and _txlog_handle(
+                spark, fsutil.join(tx_root, name)
+            )
+            if handle:
+                return name, "txlog", handle
             if name in bucketed_names and (
                 not has_plain
                 or _dir_bytes(spark, plain_path) >= cls.BUCKETED_MIN_BYTES

@@ -173,12 +173,26 @@ class _PredicateQuery(Query):
     @abstractmethod
     def _positive_predicate(self) -> Column: ...
 
+    def _prune_hint(self) -> tuple[dict, dict]:
+        """(eq, box) narrowing of the source_meta scan implied by the
+        POSITIVE predicate — ``{col: IN-list}`` / ``{col: (lo, hi)}``,
+        as :meth:`ReadonlyLake.pruned` takes them — so a txlog-served
+        lake can answer the leaf through manifest stats instead of a
+        full scan (the reference's clustered mk_hash / ev_count btrees,
+        readonly_schema.py:635-637).  Empty when the predicate has no
+        point or interval shape; ignored for inverted leaves, which
+        cannot prune by inclusion evidence."""
+        return {}, {}
+
     def source_predicate(self) -> Column:
         p = self._positive_predicate()
         return ~p if self.inverted else p
 
     def _hashes(self, lake, intrusives) -> DataFrame:
-        df = lake["source_meta"].filter(self.source_predicate())
+        eq, box = ({}, {}) if self.inverted else self._prune_hint()
+        df = lake.pruned("source_meta", predicates=box, eq=eq).filter(
+            self.source_predicate()
+        )
         return _apply_preds(df, intrusives).select(*HASH_COLS)
 
 
@@ -232,22 +246,9 @@ class HasHash(_PredicateQuery):
             return F.col("mk_hash") == self.stmt_hashes[0]
         return F.col("mk_hash").isin(self.stmt_hashes)
 
-    def _hashes(self, lake, intrusives) -> DataFrame:
-        """Point lookups route through the lake's manifest-stats prune
-        when source_meta is txlog-served (round 11, r10 verdict
-        next-round #7): bloom words + range stats exclude files
-        driver-side before any scan task launches — the reference
-        answers the same query through its clustered mk_hash btree
-        (readonly_schema.py:635-637).  The pruned frame arrives with the
-        EXACT hash predicate already applied; inverted queries (NOT IN)
-        cannot prune by inclusion evidence and take the plain path."""
-        if not self.inverted and self.stmt_hashes:
-            pruned = lake.pruned(
-                "source_meta", eq={"mk_hash": self.stmt_hashes}
-            )
-            if pruned is not None:
-                return _apply_preds(pruned, intrusives).select(*HASH_COLS)
-        return super()._hashes(lake, intrusives)
+    def _prune_hint(self) -> tuple[dict, dict]:
+        # point lookups: mk_hash bloom words + range stats
+        return {"mk_hash": self.stmt_hashes}, {}
 
 
 class HasSources(_PredicateQuery):
@@ -389,21 +390,11 @@ class HasNumEvidence(_IntrusiveQuery):
     def _positive_predicate(self) -> Column:
         return F.col("ev_count").isin(self.evidence_nums)
 
-    def _hashes(self, lake, intrusives) -> DataFrame:
-        """ev_count IN-lists route through the manifest range stats on a
-        txlog-served source_meta (round 12): a file/segment is admitted
-        only when SOME listed value falls inside its [min, max], so
-        under the ranked ev_count layout a sparse count list opens few
-        files — the same stats that serve HasEvidenceBound's intervals
-        (the reference's ev_count btree) serve this leaf's point set.
-        Inversion cannot prune by inclusion and takes the plain path."""
-        if not self.inverted and self.evidence_nums:
-            pruned = lake.pruned(
-                "source_meta", eq={"ev_count": self.evidence_nums}
-            )
-            if pruned is not None:
-                return _apply_preds(pruned, intrusives).select(*HASH_COLS)
-        return super()._hashes(lake, intrusives)
+    def _prune_hint(self) -> tuple[dict, dict]:
+        # a file/segment is admitted only when SOME listed count falls
+        # inside its ev_count [min, max]: under the ranked layout a
+        # sparse count list opens few files
+        return {"ev_count": self.evidence_nums}, {}
 
 
 _BOUND_OPS = {
@@ -461,14 +452,17 @@ class HasEvidenceBound(_IntrusiveQuery):
 
     #: bound operators an AND-interval can represent EXACTLY; '!=' (a
     #: supported bound, _parse_bound above) punches a hole in the
-    #: interval, so any query containing one takes the plain path
+    #: interval, so any query containing one gives no hint
     _BOXABLE = frozenset({"==", ">", ">=", "<", "<="})
 
-    def _box(self) -> tuple[int | None, int | None]:
-        """The AND of integer bounds as ONE closed interval [lo, hi]
-        (open bounds shift by 1 — ev_count is integral), so the interval
-        residual is EXACTLY the original predicate and manifest range
-        stats can prune on it.  Callers must pre-check :data:`_BOXABLE`."""
+    def _prune_hint(self) -> tuple[dict, dict]:
+        """The AND of integer bounds as ONE closed ev_count interval
+        [lo, hi] (open bounds shift by 1 — ev_count is integral), so the
+        manifest range stats can prune on it."""
+        if not self.evidence_bounds or not all(
+            op in self._BOXABLE for op, _ in self.evidence_bounds
+        ):
+            return {}, {}
         lo: int | None = None
         hi: int | None = None
         for op, v in self.evidence_bounds:
@@ -483,26 +477,7 @@ class HasEvidenceBound(_IntrusiveQuery):
                 lo = nlo if lo is None else max(lo, nlo)
             if nhi is not None:
                 hi = nhi if hi is None else min(hi, nhi)
-        return lo, hi
-
-    def _hashes(self, lake, intrusives) -> DataFrame:
-        """Range bounds route through the lake's manifest-stats prune on
-        a txlog-served source_meta (round 11, r10 verdict next-round
-        #7) — the ev_count per-file/per-segment ranges stand in for the
-        reference's ev_count btree.  Inversion negates an interval into
-        a union of rays, and a '!=' bound punches a hole in it — neither
-        is an interval, so both take the plain path."""
-        if (
-            not self.inverted
-            and self.evidence_bounds
-            and all(op in self._BOXABLE for op, _ in self.evidence_bounds)
-        ):
-            pruned = lake.pruned(
-                "source_meta", predicates={"ev_count": self._box()}
-            )
-            if pruned is not None:
-                return _apply_preds(pruned, intrusives).select(*HASH_COLS)
-        return super()._hashes(lake, intrusives)
+        return {}, {"ev_count": (lo, hi)}
 
 
 def _like_prefix_box(pattern: str) -> tuple[str, str] | None:
@@ -596,45 +571,30 @@ class HasAgent(Query):
             if grounded is not None:
                 ns, agent_id = grounded[0], grounded[1]
         if ns == "NAME" or ns == "AUTO":
-            # ungrounded AUTO falls back to a NAME match
-            table, df = "name_meta", lake["name_meta"]
+            table = "name_meta"  # ungrounded AUTO falls back to NAME
         elif ns == "TEXT":
-            table, df = "text_meta", lake["text_meta"]
+            table = "text_meta"
         else:
-            table, df = "other_meta", lake["other_meta"]
+            table = "other_meta"
         rid = regularize_agent_id(agent_id, ns)
         if "%" in rid or "_" in rid:
             # LIKE pattern: inclusion blooms cannot prune, but a pattern
             # with a LITERAL PREFIX before its first wildcard is also a
             # RANGE — every match sorts in [prefix, increment(prefix)] —
-            # so on a txlog-served lake it routes through the manifest's
-            # db_id range stats (round 12): the parquet analog of the
-            # reference btrees' text_pattern_ops prefix scans
-            # (schemas/mixins.py:70-97).  The pruned frame carries only
-            # the superset box; the exact LIKE still applies on top.
-            # Leading-wildcard patterns have no prefix and stay plain.
+            # so it narrows the scan through the db_id range stats: the
+            # parquet analog of the reference btrees' text_pattern_ops
+            # prefix scans (schemas/mixins.py:70-97).  The box is only a
+            # superset; the exact LIKE applies on top.  Leading-wildcard
+            # patterns have no prefix and scan the whole table.
             box = _like_prefix_box(rid)
-            pruned = (
-                lake.pruned(table, predicates={"db_id": box})
-                if box is not None
-                else None
-            )
-            df = (df if pruned is None else pruned).filter(
-                F.col("db_id").like(rid)
-            )
+            df = lake.pruned(
+                table, predicates={"db_id": box} if box else None
+            ).filter(F.col("db_id").like(rid))
         else:
-            # exact-id lookup — the single most common serving query:
-            # on a txlog-served lake, route through the manifest's db_id
-            # bloom words (round 11; the reference's agent-id btrees,
-            # mixins.py) so only the files that could hold the id are
-            # opened.  The pruned frame arrives with db_id == rid
-            # already applied; LIKE patterns cannot prune by inclusion.
-            pruned = lake.pruned(table, eq={"db_id": rid})
-            df = (
-                pruned
-                if pruned is not None
-                else df.filter(F.col("db_id") == rid)
-            )
+            # exact-id lookup — the single most common serving query —
+            # through the db_id bloom words (the reference's agent-id
+            # btrees, mixins.py)
+            df = lake.pruned(table, eq={"db_id": rid})
         if table == "other_meta":
             df = df.filter(F.col("db_name") == ns)
         if self.role is not None:
@@ -690,18 +650,10 @@ class FromMeshIds(Query):
     def _hashes(self, lake, intrusives) -> DataFrame:
         table = "mesh_term_meta" if self._kind == "D" else "mesh_concept_meta"
         nums = [int(m[1:]) for m in self.mesh_ids]
-        # mesh_num IN-lists route through the lake's manifest-stats
-        # prune when the mesh table is txlog-served (round 12, r11
-        # verdict next-round #3): bloom words exclude files — and whole
-        # segments — driver-side before any scan task launches, exactly
-        # the HasHash shape; the reference answers this through its
-        # clustered mesh_num index (readonly_schema.py:635-637 family).
-        # The pruned frame arrives with the exact IN predicate applied.
-        base = (
-            lake.pruned(table, eq={"mesh_num": nums}) if nums else None
-        )
-        if base is None:
-            base = lake[table].filter(F.col("mesh_num").isin(nums))
+        # mesh_num IN-list through the mesh table's bloom words, the
+        # HasHash shape; the reference answers this through its
+        # clustered mesh_num index (readonly_schema.py:635-637 family)
+        base = lake.pruned(table, eq={"mesh_num": nums})
         pos = (
             _apply_preds(base, intrusives)
             .select(*HASH_COLS)
@@ -711,6 +663,27 @@ class FromMeshIds(Query):
             return pos
         universe = _apply_preds(lake["source_meta"], intrusives).select(*HASH_COLS)
         return universe.join(pos.select("mk_hash"), "mk_hash", "left_anti")
+
+
+#: reading_ref_link match key of each paper-id type (see :func:`_ref_col`)
+_REF_COLS = {
+    "pmid": "pmid_num",
+    "pmcid": "pmcid_num",
+    "trid": "trid",
+    "doi": "doi",
+}
+
+
+def _ref_col(key: str) -> Column:
+    """The reading_ref_link expression a :meth:`FromPapers._ref_keys` key
+    matches: the numeric id column, or for "doi" the (doi_ns, doi_id)
+    PAIR as "ns/id" — doi_id alone collides across publisher namespaces
+    (reference: mixins.py:431-446)."""
+    if key == "doi":
+        return F.concat_ws(
+            "/", F.col("doi_ns").cast("string"), F.col("doi_id")
+        )
+    return F.col(key)
 
 
 class FromPapers(Query):
@@ -740,91 +713,64 @@ class FromPapers(Query):
     def _from_constraint(cls, constraint: dict) -> "Query":
         return cls([tuple(p) for p in constraint["paper_list"]])
 
-    def _ref_predicate(self) -> Column:
+    def _ref_keys(self) -> dict[str, list]:
+        """The paper list parsed into reading_ref_link match values per
+        :func:`_ref_col` key.  Ids that fail parsing are dropped: they
+        match nothing."""
         from indra_db_spark.functions.ids import (
             process_doi,
             process_pmcid,
             process_pmid,
         )
 
-        clauses = []
-        by_type: dict[str, list] = {}
-        for t, i in self.paper_list:
-            by_type.setdefault(t, []).append(i)
-        if "pmid" in by_type:
-            nums = [process_pmid(i) for i in by_type["pmid"]]
-            clauses.append(F.col("pmid_num").isin([n for n in nums if n is not None]))
-        if "pmcid" in by_type:
-            nums = [process_pmcid(i)[0] for i in by_type["pmcid"]]
-            clauses.append(F.col("pmcid_num").isin([n for n in nums if n is not None]))
-        if "doi" in by_type:
-            # match the (doi_ns, doi_id) PAIR — doi_id alone collides across
-            # publisher namespaces (reference: mixins.py:431-446)
-            pairs = [process_doi(i) for i in by_type["doi"]]
-            keys = [f"{ns}/{gid}" for ns, gid in pairs if ns is not None]
-            clauses.append(
-                F.concat_ws(
-                    "/", F.col("doi_ns").cast("string"), F.col("doi_id")
-                ).isin(keys)
-            )
-        if "trid" in by_type:
-            clauses.append(F.col("trid").isin([int(i) for i in by_type["trid"]]))
-        out = None
-        for c in clauses:
-            out = c if out is None else (out | c)
-        return out if out is not None else F.lit(False)
+        def doi(i):
+            ns, gid = process_doi(i)
+            return None if ns is None else f"{ns}/{gid}"
 
-    def _pruned_refs(self, lake) -> DataFrame | None:
-        """reading_ref_link rows matching the paper list via the lake's
-        manifest-stats prune (round 12, r11 verdict next-round #3), or
-        None when the table is not txlog-served or the list needs the
-        plain path.  The reference answers these point ids through its
-        trid/pmid btrees (schemas/mixins.py:70-97); here each id TYPE
-        becomes one bloom-pruned point scan and the per-type results
-        union — sound because _ref_predicate is an OR of the same
-        per-type IN clauses (rows matching several types just appear in
-        several branches; the rid-level distinct collapses them).  DOIs
-        match on a (doi_ns, doi_id) PAIR, which a single-column eq probe
-        cannot express — any doi in the list routes everything to the
-        plain path."""
-        from indra_db_spark.functions.ids import process_pmcid, process_pmid
-
-        by_type: dict[str, list] = {}
+        parse = {
+            "pmid": process_pmid,
+            "pmcid": lambda i: process_pmcid(i)[0],
+            "trid": int,
+            "doi": doi,
+        }
+        keys: dict[str, list] = {}
         for t, i in self.paper_list:
-            by_type.setdefault(t, []).append(i)
-        if not by_type or "doi" in by_type:
-            return None
-        col_vals = []
-        for t, ids in by_type.items():
-            col = {"pmid": "pmid_num", "pmcid": "pmcid_num", "trid": "trid"}[t]
-            if t == "pmid":
-                nums = [process_pmid(i) for i in ids]
-            elif t == "pmcid":
-                nums = [process_pmcid(i)[0] for i in ids]
-            else:
-                nums = [int(i) for i in ids]
-            nums = [n for n in nums if n is not None]
-            if nums:  # a type whose every id failed parsing matches nothing
-                col_vals.append((col, nums))
-        if not col_vals:
-            return None
-        parts = []
-        for col, nums in col_vals:
-            part = lake.pruned("reading_ref_link", eq={col: nums})
-            if part is None:
-                return None  # not txlog-served — plain path does it all
-            parts.append(part)
+            v = parse[t](i)
+            vals = keys.setdefault(_REF_COLS[t], [])
+            if v is not None:
+                vals.append(v)
+        return keys
+
+    def _ref_predicate(self) -> Column:
+        """reading_ref_link rows matching the paper list, as one plain
+        filter (the evidence-level papers clause)."""
+        out = F.lit(False)
+        for key, vals in self._ref_keys().items():
+            out = out | _ref_col(key).isin(vals)
+        return out
+
+    def _ref_rows(self, lake) -> DataFrame:
+        """reading_ref_link rows matching the paper list: each numeric id
+        column is one point probe through :meth:`ReadonlyLake.pruned`
+        (the reference's trid/pmid btrees, schemas/mixins.py:70-97);
+        the DOI pair cannot be a single-column probe, so it is a plain
+        filter.  The parts union — a row matching several repeats, and
+        the caller's rid-level distinct collapses it."""
+        refs = lake["reading_ref_link"]
+        parts = [
+            refs.filter(_ref_col(key).isin(vals))
+            if key == "doi"
+            else lake.pruned("reading_ref_link", eq={key: vals})
+            for key, vals in self._ref_keys().items()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
 
     def _hashes(self, lake, intrusives) -> DataFrame:
-        refs = self._pruned_refs(lake)
-        if refs is None:
-            refs = lake["reading_ref_link"].filter(self._ref_predicate())
         rids = (
-            refs
+            self._ref_rows(lake)
             .select(F.col("rid").alias("reading_id"))
             .distinct()
         )
@@ -913,50 +859,34 @@ class Intersection(_MergeQuery):
         return build_union([q.invert() for q in self.queries])
 
     def _prune_hints(self) -> tuple[dict, dict]:
-        """(eq hints, box hints) the conjunction's NON-inverted leaves
-        imply for the collapsed source_meta scan (round 12): without
-        this, ``HasHash(...) & HasSources(...)`` lost the manifest
-        pruning HasHash gets standing alone, because the single-scan
-        collapse below reads the PLAIN table.  Hints only ever narrow
-        (the conjunction's own predicates are re-applied exactly on
-        top, and a hinted leaf's residual is implied by them), so a
-        pruned base scan is a strict subset-of-files win.  Boxes from
-        multiple bound leaves intersect; a contradictory (lo > hi) box
-        stays — skip_read's residual then yields the correct empty.
-        Point lists from multiple leaves on the SAME column intersect
-        too (round 13, ADVICE: setdefault kept only the FIRST leaf's
-        list — sound, but the intersection is strictly tighter); an
-        empty intersection proves the conjunction empty, and _hashes
-        skips the scan entirely."""
+        """(eq hints, box hints) for the collapsed source_meta scan: the
+        merged :meth:`_PredicateQuery._prune_hint` of the conjunction's
+        NON-inverted predicate leaves, so ``HasHash(...) &
+        HasSources(...)`` keeps the manifest pruning HasHash gets
+        standing alone.  Hints only ever narrow (the conjunction's own
+        predicates are re-applied exactly on top), so point lists on the
+        same column intersect — an empty intersection proves the
+        conjunction empty — and boxes on the same column intersect; a
+        contradictory (lo > hi) box stays, and the exact residual then
+        yields the correct empty."""
         eq_hints: dict = {}
         box_hints: dict = {}
-
-        def _narrow(col: str, values) -> None:
-            if col in eq_hints:
-                eq_hints[col] = sorted(set(eq_hints[col]) & set(values))
-            else:
-                eq_hints[col] = list(values)
-
         for q in self.queries:
-            if q.inverted:
-                continue  # negations cannot prune by inclusion
-            if isinstance(q, HasHash) and q.stmt_hashes:
-                _narrow("mk_hash", q.stmt_hashes)
-            elif isinstance(q, HasNumEvidence) and q.evidence_nums:
-                _narrow("ev_count", q.evidence_nums)
-            elif (
-                isinstance(q, HasEvidenceBound)
-                and q.evidence_bounds
-                and all(op in q._BOXABLE for op, _ in q.evidence_bounds)
-            ):
-                lo, hi = q._box()
-                if "ev_count" in box_hints:
-                    plo, phi = box_hints["ev_count"]
-                    if lo is None or (plo is not None and plo > lo):
-                        lo = plo
-                    if hi is None or (phi is not None and phi < hi):
-                        hi = phi
-                box_hints["ev_count"] = (lo, hi)
+            if q.inverted or not q.is_predicate:
+                continue
+            eq, box = q._prune_hint()
+            for col, values in eq.items():
+                eq_hints[col] = (
+                    sorted(set(eq_hints[col]) & set(values))
+                    if col in eq_hints
+                    else list(values)
+                )
+            for col, (lo, hi) in box.items():
+                plo, phi = box_hints.get(col, (None, None))
+                box_hints[col] = (
+                    max((x for x in (lo, plo) if x is not None), default=None),
+                    min((x for x in (hi, phi) if x is not None), default=None),
+                )
         return eq_hints, box_hints
 
     def _hashes(self, lake, intrusives) -> DataFrame:
@@ -976,28 +906,13 @@ class Intersection(_MergeQuery):
                 pos_branches.append(q)
 
         branches: list[DataFrame] = []
-        # single-scan conjunction of all predicate + intrusive leaves —
-        # routed through the manifest prune when any leaf supplies a
-        # point/range hint (round 12; see _prune_hints)
+        # single-scan conjunction of all predicate + intrusive leaves,
+        # narrowed by the leaves' merged prune hints
         if preds or not pos_branches:
             eq_hints, box_hints = self._prune_hints()
-            base = None
-            if any(not v for v in eq_hints.values()):
-                # two leaves' point lists on the same column intersect
-                # to NOTHING: the conjunction's own predicates (both
-                # IN-lists are in `preds`) prove this branch empty, so
-                # no scan runs at all — Catalyst folds the always-false
-                # filter to an empty LocalRelation
-                base = lake["source_meta"].filter(F.lit(False))
-            elif eq_hints or box_hints:
-                base = lake.pruned(
-                    "source_meta",
-                    predicates=box_hints or None,
-                    eq=eq_hints or None,
-                )
-            if base is None:
-                base = lake["source_meta"]
-            base = base.filter(_and_all(preds))
+            base = lake.pruned(
+                "source_meta", predicates=box_hints, eq=eq_hints
+            ).filter(_and_all(preds))
             base = _apply_preds(base, child_intrusives).select(*HASH_COLS)
             branches.append(base)
         branches.extend(q.hashes(lake, child_intrusives) for q in pos_branches)

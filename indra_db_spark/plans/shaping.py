@@ -9,8 +9,9 @@ Plan shapes:
 - evidence top-N per statement: the reference's correlated LATERAL join
   (query.py:489-506) becomes a row_number window, which Catalyst group-limits
   before the shuffle;
-- metadata: left joins onto source_meta (src_json) and reading_ref_link
-  (text refs) (query.py:493-517);
+- metadata: source_meta (src_json) and reading_ref_link (text refs) rows
+  for the collected page, fetched by point lookup through
+  :meth:`ReadonlyLake.pruned` (query.py:493-517);
 - JSON assembly happens driver-side on the collected page (the page is
   bounded by limit/ev_limit, so this is O(page), never O(corpus)).
 """
@@ -32,24 +33,6 @@ from indra_db_spark.plans.queries import Query
 MAX_STMTS = 500
 DEFAULT_EV_LIMIT = 10
 
-#: largest page for which the evidence/metadata scans route through the
-#: driver-side manifest prune (r12 verdict next-round #1).  The service
-#: clamps pages to MAX_STMTS, so every real page qualifies; the margin
-#: covers programmatic callers with a somewhat larger explicit limit,
-#: while an UNBOUNDED page falls back to the broadcast semi-join (an
-#: eq-list prune over millions of keys would admit everything anyway
-#: and burn the skip_read probe budget doing it).
-PAGE_PRUNE_MAX = 2 * MAX_STMTS
-
-
-#: cap on the rid point set the text-ref fetch routes through the
-#: manifest (r13 review): the residual ``isin`` costs ~1.5 s of py4j
-#: marshalling per 2000 literals — a bounded constant that beats any
-#: full-table scan for every real page (service max: MAX_STMTS ×
-#: DEFAULT_EV_LIMIT rids) — while a truly unbounded set (ev_limit=None
-#: on a huge page) falls back to the broadcast semi-join.
-RID_PRUNE_MAX = 2 * MAX_STMTS * DEFAULT_EV_LIMIT
-
 
 def _bound_evidence(lake, ev, ev_limit, evidence_filter):
     """The shared evidence-bounding block of get_statements /
@@ -66,32 +49,6 @@ def _bound_evidence(lake, ev, ev_limit, evidence_filter):
     elif ev_limit == 0:
         ev = ev.filter(F.lit(False))
     return ev
-
-
-def _page_restricted(lake: ReadonlyLake, table: str, hashes, keys_df):
-    """``table`` restricted to the page's ``hashes`` — through the txlog
-    manifest's mk_hash bloom words when the lake serves the table from a
-    transaction log and the page is bounded (r12 verdict next-round #1:
-    the statement-page hot path previously full-scanned the PLAIN
-    evidence frame and semi-joined the page, i.e. every REST
-    ``get_statements`` call read every evidence file at 100 TB).  The
-    reference's analog is the evidence lateral join landing on the
-    fast_raw_pa_link mk_hash index (query.py:489-506,
-    readonly_schema.py:320-357).  Falls back to a broadcast semi-join
-    against ``keys_df`` when the table is not txlog-served or the page
-    is too large to probe; either way the rows returned are EXACTLY the
-    page's (the pruned frame arrives with ``mk_hash IN hashes`` already
-    applied)."""
-    pruned = (
-        lake.pruned(table, eq={"mk_hash": hashes})
-        if len(hashes) <= PAGE_PRUNE_MAX
-        else None
-    )
-    if pruned is not None:
-        return pruned
-    return lake[table].join(
-        F.broadcast(keys_df.select("mk_hash")), "mk_hash", "left_semi"
-    )
 
 
 def _ranked_hashes(
@@ -157,17 +114,18 @@ def get_statements(
     spark = lake["source_meta"].sparkSession
     # page-sized (≤ MAX_STMTS) driver-built frame: bound the slice count
     # so its scans cost 1 Python-runner task, not one per core
-    from indra_db_spark.operators.pq import local_artifact_df
+    from indra_db_spark.session import local_artifact_df
 
     page_local = local_artifact_df(spark, page_rows, page.schema)
 
-    # evidence + metadata scans restricted to the page — manifest-bloom
-    # pruned on a txlog-served lake, broadcast-semi-joined otherwise.
-    # ev_base (pre-filter, pre-limit) also feeds the pa_json pick below:
-    # the old code aggregated the WHOLE fast_raw_pa_link before joining
-    # the page, an unprunable full-table agg.
-    ev_base = _page_restricted(lake, "fast_raw_pa_link", hashes, page_local)
-    sm_page = _page_restricted(lake, "source_meta", hashes, page_local)
+    # evidence + metadata scans restricted to the page's hashes — on a
+    # txlog-served lake through the manifest's mk_hash bloom words, the
+    # reference's evidence lateral join landing on the fast_raw_pa_link
+    # mk_hash index (query.py:489-506, readonly_schema.py:320-357).
+    # ev_base (pre-filter, pre-limit) also feeds the pa_json pick below,
+    # so that aggregate is page-sized too.
+    ev_base = lake.pruned("fast_raw_pa_link", eq={"mk_hash": hashes})
+    sm_page = lake.pruned("source_meta", eq={"mk_hash": hashes})
 
     ev = _bound_evidence(lake, ev_base, ev_limit, evidence_filter)
     ev = ev.select("mk_hash", "id", "raw_json", "src", "reading_id")
@@ -196,28 +154,15 @@ def get_statements(
         meta_rows = f_meta.result()
     # text-ref fetch: the collected evidence's reading_ids are a BOUNDED
     # point set (≤ page × ev_limit), so the reading_ref_link rows come
-    # through the manifest prune too (rid ranges/blooms) instead of the
-    # old left join that scanned or shuffled the WHOLE text-ref table per
-    # page — the reference lands this on the readings PK index
+    # by point lookup too (rid ranges/blooms on a txlog-served lake)
+    # instead of a join that scans or shuffles the WHOLE text-ref table
+    # per page — the reference lands this on the readings PK index
     # (query.py:493-517).  The join itself is a driver-side dict on the
     # already-collected page, exactly like the JSON assembly below.
     rids = sorted({r.reading_id for r in ev_rows if r.reading_id is not None})
     ref_by_rid: dict[int, object] = {}
     if rids:
-        rrl = (
-            lake.pruned("reading_ref_link", eq={"rid": rids})
-            if len(rids) <= RID_PRUNE_MAX
-            else None
-        )
-        if rrl is None:
-            from indra_db_spark.operators.pq import local_artifact_df
-
-            rid_df = local_artifact_df(
-                spark, [(int(x),) for x in rids], "rid bigint"
-            )
-            rrl = lake["reading_ref_link"].join(
-                F.broadcast(rid_df), "rid", "left_semi"
-            )
+        rrl = lake.pruned("reading_ref_link", eq={"rid": rids})
         ref_by_rid = {r.rid: r for r in rrl.collect()}
 
     ev_by_hash: dict[int, list] = {}
@@ -284,13 +229,7 @@ def get_evidence_page(
     # (r13 review) — the residual/bloom value types must match the
     # column's
     hashes = [int(h) for h in hashes]
-    spark = lake["fast_raw_pa_link"].sparkSession
-    from indra_db_spark.operators.pq import local_artifact_df
-
-    keys_df = local_artifact_df(
-        spark, [(h,) for h in hashes], "mk_hash bigint"
-    )
-    ev = _page_restricted(lake, "fast_raw_pa_link", hashes, keys_df)
+    ev = lake.pruned("fast_raw_pa_link", eq={"mk_hash": hashes})
     ev = _bound_evidence(lake, ev, ev_limit, evidence_filter)
     return ev.join(
         lake["reading_ref_link"].withColumnRenamed("rid", "reading_id"),
@@ -352,7 +291,7 @@ def get_interactions(
         "ev_count", "belief", "activity", "is_active", "src_json",
     )
     out = out.orderBy(F.desc("ev_count"), F.asc("mk_hash"))
-    return out.limit(limit) if limit else out
+    return out if limit is None else out.limit(limit)
 
 
 def get_relations(
@@ -379,7 +318,7 @@ def get_relations(
         .drop("agent_key")
         .orderBy(F.desc("ev_count"), F.asc("type_num"))
     )
-    return out.limit(limit) if limit else out
+    return out if limit is None else out.limit(limit)
 
 
 def get_agents(
@@ -414,7 +353,7 @@ def get_agents(
         .drop("agent_key")
         .orderBy(F.desc("ev_count"), F.asc("agent_count"))
     )
-    if limit:
+    if limit is not None:
         # bounded page: ONE collect serves both the covered-complex
         # harvest and the caller's own action (the page rows come back
         # as a page-sized local frame).  This replaces the

@@ -66,7 +66,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 LOG_DIR = "_txlog"
 DATA_DIR = "data"
@@ -167,6 +167,41 @@ class NoCommittedData(ValueError):
     fallback paths (e.g. :meth:`plans.lake.ReadonlyLake.pruned`) catch
     EXACTLY this case without also swallowing misuse errors like an
     empty eq-list (r11 ADVICE #1)."""
+
+
+def eq_lists(eq: dict | None) -> dict[str, list]:
+    """Point predicates as sorted distinct value lists: each ``eq``
+    entry is a single value or an IN-list for its column (the query
+    algebra's HasHash shape)."""
+    return {
+        c: sorted(set(v))
+        if isinstance(v, (list, tuple, set, frozenset))
+        else [v]
+        for c, v in (eq or {}).items()
+    }
+
+
+def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
+    """The EXACT predicate of a box/point probe: ``lo <= col <= hi`` per
+    ``boxes`` entry (a None edge is open) AND ``col IN vals`` per
+    ``eqs`` entry (an empty list matches nothing).  Every leaf scan
+    applies it on top of whatever pruning chose the files, so the rows
+    returned never depend on the stats."""
+    from pyspark.sql import functions as F
+
+    cond = F.lit(True)
+    for c, (lo, hi) in boxes.items():
+        if lo is not None:
+            cond = cond & (F.col(c) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(c) <= F.lit(hi))
+    for c, vals in eqs.items():
+        cond = cond & (
+            (F.col(c) == F.lit(vals[0]))
+            if len(vals) == 1
+            else F.col(c).isin(vals)
+        )
+    return cond
 
 
 class LogStore:
@@ -1999,22 +2034,13 @@ class TxTable:
         key opens only the segments whose union filter admits it, not
         every segment on the way to the per-file words (r11 verdict
         next-round #1)."""
-        from pyspark.sql import functions as F
-
         boxes = dict(predicates or {})
-        # eq values may be a single value or an IN-list (the query
-        # algebra's HasHash shape): a file/segment survives when ANY
-        # listed value could be present
-        eqs: dict[str, list] = {}
-        for c, v in (eq or {}).items():
-            vals = (
-                sorted(set(v))
-                if isinstance(v, (list, tuple, set, frozenset))
-                else [v]
-            )
+        # a file/segment survives when ANY listed eq value could be
+        # present
+        eqs = eq_lists(eq)
+        for c, vals in eqs.items():
             if not vals:
                 raise ValueError(f"skip_read eq[{c!r}] is an empty list")
-            eqs[c] = vals
         if not boxes and not eqs:
             raise ValueError("skip_read needs predicates and/or eq")
         vs = self._versions()
@@ -2268,19 +2294,11 @@ class TxTable:
             {f: dv[f] for f in survivors if f in dv},
             dv_rows=body.get("dv_rows"),
         )
-        cond = F.lit(True)
-        for c, (lo, hi) in boxes.items():
-            if lo is not None:
-                cond = cond & (F.col(c) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(c) <= F.lit(hi))
-        for c, vals in eqs.items():
-            cond = cond & (
-                (F.col(c) == F.lit(vals[0]))
-                if len(vals) == 1
-                else F.col(c).isin(vals)
-            )
-        return df.filter(cond), len(survivors), files_total
+        return (
+            df.filter(residual_filter(boxes, eqs)),
+            len(survivors),
+            files_total,
+        )
 
     def _swap_commit(
         self,

@@ -61,6 +61,7 @@ from indra_db_spark.plans.principal import (
 )
 from indra_db_spark.plans.queries import FromAgentJson, FromMeshIds, FromPapers, HasHash
 from indra_db_spark.plans.shaping import (
+    DEFAULT_EV_LIMIT,
     EvidenceFilter,
     get_agents,
     get_hashes,
@@ -85,7 +86,6 @@ RESULT_TYPES = ("statements", "hashes", "interactions", "relations", "agents")
 #: FromHashApiCall.default_ev_lim (call_handlers.py:635): the single-hash
 #: page shows effectively all evidence
 FROM_HASH_EV_LIMIT = 1000
-DEFAULT_EV_LIMIT = 10  # ApiCall.default_ev_lim (call_handlers.py:44)
 
 
 def _web_params(qs: dict[str, list[str]]) -> dict:
@@ -147,10 +147,15 @@ def make_handler(
             self.wfile.write(body)
 
         def _page_args(self, qs) -> dict:
-            limit = min(int(qs.get("limit", [str(MAX_STMTS)])[0]), MAX_STMTS)
+            limit = int(qs.get("limit", [str(MAX_STMTS)])[0])
+            offset = int(qs.get("offset", ["0"])[0])
+            if limit < 0 or offset < 0:
+                raise WebQueryError(
+                    f"limit and offset must be >= 0, got {limit}, {offset}"
+                )
             return {
-                "limit": limit,
-                "offset": int(qs.get("offset", ["0"])[0]),
+                "limit": min(limit, MAX_STMTS),
+                "offset": offset,
                 "sort_by": qs.get("sort_by", ["ev_count"])[0],
             }
 
@@ -221,23 +226,16 @@ def make_handler(
                 query, lake, limit=page["limit"],
                 complexes_covered=complexes_covered,
             )
-            try:
-                out_df = df
-                if w_english:
-                    # agents grain carries no single type — the reference
-                    # uses the bolded meta fallback here (util.py:144-165)
-                    out_df = df.withColumn(
-                        "english", meta_english_expr(F.col("agent_json"))
-                    )
-                return {
-                    "results": _rows_json(out_df, None),
-                    "complexes_covered": sorted(covered),
-                }
-            finally:
-                # get_agents persists its result for the harvest/response
-                # double action; release it so repeated paging calls don't
-                # accumulate cached DataFrames in executor storage
-                df.unpersist()
+            if w_english:
+                # agents grain carries no single type — the reference
+                # uses the bolded meta fallback here (util.py:144-165)
+                df = df.withColumn(
+                    "english", meta_english_expr(F.col("agent_json"))
+                )
+            return {
+                "results": _rows_json(df, None),
+                "complexes_covered": sorted(covered),
+            }
 
         # ------------------------------------------------------------ GET
 

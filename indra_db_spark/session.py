@@ -76,8 +76,7 @@ def local_artifact_df(spark: SparkSession, rows, schema):
     codebook scan; 4.2 s for a one-row curation-ledger append, 0.3 s
     through this constructor).  Artifact frames are hyperparameter- or
     event-sized, so they land at 1–2 slices at every real sizing;
-    corpus-sized frames never take this constructor.  Canonical home of
-    the r13 helper (``operators.pq`` re-exports it)."""
+    corpus-sized frames never take this constructor."""
     rows = rows if isinstance(rows, (list, tuple)) else list(rows)
     sc = spark.sparkContext
     n = max(

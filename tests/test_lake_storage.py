@@ -598,7 +598,7 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     TxTable.skip_read (round 11, r10 verdict next-round #7): write_txlog
     with stats=True records ev_count range stats + mk_hash bloom words,
     and the leaf scans then prune files driver-side — results equal the
-    in-memory lake while lake.last_prune proves files_read < files_total.
+    in-memory lake while lake.prune_log proves files_read < files_total.
     Inverted forms cannot prune and must fall back, identically."""
     from pyspark.sql import functions as F
 
@@ -637,73 +637,73 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     assert "source_meta" in lake._tx
 
     hi = mem_lake["source_meta"].agg(F.max("ev_count")).first()[0]
-    # no manual last_prune resets needed anywhere below: pruned() clears
-    # it on entry, so plain-path queries can never read a stale tuple
-    # (r11 ADVICE #4)
+    # every check clears the prune log before the tx-lake call, so the
+    # entry it reads (or the emptiness it asserts) is that call's own
     qr = HasEvidenceBound([f">= {hi}"])
     want_r = {r.mk_hash for r in get_hashes(qr, mem_lake).collect()}
+    lake.prune_log.clear()
     got_r = {r.mk_hash for r in get_hashes(qr, lake).collect()}
     assert got_r == want_r and got_r
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
 
     target = mem_lake["source_meta"].select("mk_hash").first()[0]
     qh = HasHash([target])
+    lake.prune_log.clear()
     got_h = {r.mk_hash for r in get_hashes(qh, lake).collect()}
     assert got_h == {target}
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
 
     # IN-list form prunes too, and misses prove absence
     qmiss = HasHash([target, 999_999_999_999])
+    lake.prune_log.clear()
     assert {
         r.mk_hash for r in get_hashes(qmiss, lake).collect()
     } == {target}
-    assert lake.last_prune[0] < lake.last_prune[1]
+    assert lake.prune_log[-1][1] < lake.prune_log[-1][2]
 
     # inversion: NOT IN cannot prune by inclusion stats — plain path,
-    # same answer as the in-memory lake.  (The three negative checks
-    # below reset the observable first: these query shapes never even
-    # ATTEMPT a prune, so nothing clears the previous scan's tuple —
-    # pruned()'s entry reset covers attempted-but-fell-back paths.)
+    # same answer as the in-memory lake
     qinv = ~HasHash([target])
-    lake.last_prune = None
+    lake.prune_log.clear()
     want_i = {r.mk_hash for r in get_hashes(qinv, mem_lake).collect()}
     got_i = {r.mk_hash for r in get_hashes(qinv, lake).collect()}
-    assert got_i == want_i and lake.last_prune is None
+    assert got_i == want_i and not lake.prune_log
 
     # '!=' is a supported bound that punches a HOLE in the interval —
-    # it must take the plain path (same answer), never reach _box()
-    # (round-11 review: the op-dispatch there would KeyError)
+    # it gives no prune hint and takes the plain path (same answer)
     qne = HasEvidenceBound([">= 1", "!= 2"])
-    lake.last_prune = None
+    lake.prune_log.clear()
     want_ne = {r.mk_hash for r in get_hashes(qne, mem_lake).collect()}
     got_ne = {r.mk_hash for r in get_hashes(qne, lake).collect()}
-    assert got_ne == want_ne and lake.last_prune is None
+    assert got_ne == want_ne and not lake.prune_log
 
     # HasAgent's exact-id lookup routes through name_meta's db_id bloom
     # words (the reference's agent-id btree shape)
     qa = HasAgent("MEK")
     want_a = {r.mk_hash for r in get_hashes(qa, mem_lake).collect()}
+    lake.prune_log.clear()
     got_a = {r.mk_hash for r in get_hashes(qa, lake).collect()}
     assert got_a == want_a and got_a
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
     # a prefix-LIKE is ALSO a range: [prefix, increment(prefix)] routes
     # through the db_id range stats (round 12, the text_pattern_ops
     # btree analog) — selective here because name_meta is range-laid-out
     qlike = HasAgent("ME%")
     want_l = {r.mk_hash for r in get_hashes(qlike, mem_lake).collect()}
+    lake.prune_log.clear()
     got_l = {r.mk_hash for r in get_hashes(qlike, lake).collect()}
     assert got_l == want_l and got_l
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
     # a LEADING-wildcard pattern has no literal prefix — plain path
     qlead = HasAgent("%EK")
-    lake.last_prune = None
+    lake.prune_log.clear()
     want_le = {r.mk_hash for r in get_hashes(qlead, mem_lake).collect()}
     got_le = {r.mk_hash for r in get_hashes(qlead, lake).collect()}
-    assert got_le == want_le and lake.last_prune is None
+    assert got_le == want_le and not lake.prune_log
 
     # HasNumEvidence's ev_count IN-list rides the same range stats that
     # serve HasEvidenceBound (round 12) — sparse counts open few files
@@ -713,9 +713,10 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     lo_ev = mem_lake["source_meta"].agg(F.min("ev_count")).first()[0]
     qn = HasNumEvidence([lo_ev, hi])
     want_n = {r.mk_hash for r in get_hashes(qn, mem_lake).collect()}
+    lake.prune_log.clear()
     got_n = {r.mk_hash for r in get_hashes(qn, lake).collect()}
     assert got_n == want_n and got_n
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
 
     # a CONJUNCTION with a prunable leaf routes its collapsed
@@ -730,9 +731,10 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     )
     qconj = build_intersection([HasHash([target]), HasSources([some_src])])
     want_c = {r.mk_hash for r in get_hashes(qconj, mem_lake).collect()}
+    lake.prune_log.clear()
     got_c = {r.mk_hash for r in get_hashes(qconj, lake).collect()}
     assert got_c == want_c
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
 
     # FromMeshIds routes its mesh_num IN-list through the mesh table's
@@ -740,9 +742,10 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     mesh_num = mem_lake["mesh_term_meta"].select("mesh_num").first()[0]
     qm = FromMeshIds([f"D{mesh_num}"])
     want_m = {r.mk_hash for r in get_hashes(qm, mem_lake).collect()}
+    lake.prune_log.clear()
     got_m = {r.mk_hash for r in get_hashes(qm, lake).collect()}
     assert got_m == want_m and got_m
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
 
     # FromPapers: each id TYPE is one bloom-pruned point scan on
@@ -750,20 +753,57 @@ def test_algebra_leaf_scans_prune_through_manifest_stats(spark, tmp_path):
     ref = mem_lake["reading_ref_link"].select("pmid_num", "trid").first()
     qp = FromPapers([("pmid", str(ref.pmid_num)), ("trid", str(ref.trid))])
     want_p = {r.mk_hash for r in get_hashes(qp, mem_lake).collect()}
+    lake.prune_log.clear()
     got_p = {r.mk_hash for r in get_hashes(qp, lake).collect()}
     assert got_p == want_p and got_p
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
-    # a DOI in the list needs the (doi_ns, doi_id) PAIR match — the
-    # whole lookup takes the plain path, same answer
+    # a DOI needs the (doi_ns, doi_id) PAIR match, which a single-column
+    # probe cannot express: the DOI part is a plain filter unioned with
+    # the trid probe — only the trid scan is pruned, same answer
     doi = mem_lake["reading_ref_link"].select("doi").where(
         F.col("doi").isNotNull()
     ).first()[0]
     qd = FromPapers([("doi", doi), ("trid", str(ref.trid))])
-    lake.last_prune = None
     want_d = {r.mk_hash for r in get_hashes(qd, mem_lake).collect()}
+    lake.prune_log.clear()
     got_d = {r.mk_hash for r in get_hashes(qd, lake).collect()}
-    assert got_d == want_d and lake.last_prune is None
+    assert got_d == want_d
+    assert [t for t, _, _ in lake.prune_log] == ["reading_ref_link"]
+
+
+def test_pruned_is_exact_without_txlog(spark):
+    """pruned() is total: on a lake with no transaction log it returns
+    the plain frame with the box and point predicates applied exactly —
+    for a box, an eq list, both, and neither — and logs no prune."""
+    from pyspark.sql import functions as F
+
+    lake, _, _ = fixture_lake(spark)
+    sm = lake["source_meta"]
+    evs = sorted(r.ev_count for r in sm.select("ev_count").collect())
+    lo, hi = evs[len(evs) // 4], evs[3 * len(evs) // 4]
+    hashes = [r.mk_hash for r in sm.select("mk_hash").limit(3).collect()]
+    hashes.append(999_999_999_999)  # absent key
+    in_box = F.col("ev_count").between(lo, hi)
+    in_list = F.col("mk_hash").isin(hashes)
+    cases = [
+        ({"ev_count": (lo, hi)}, None, sm.filter(in_box)),
+        (None, {"mk_hash": hashes}, sm.filter(in_list)),
+        (
+            {"ev_count": (lo, hi)},
+            {"mk_hash": hashes},
+            sm.filter(in_box & in_list),
+        ),
+        (None, None, sm),
+    ]
+
+    def keys(df):
+        return sorted((r.mk_hash, r.ev_count) for r in df.collect())
+
+    for predicates, eq, want in cases:
+        got = lake.pruned("source_meta", predicates=predicates, eq=eq)
+        assert keys(got) == keys(want) and keys(want)
+    assert not lake.prune_log
 
 
 def test_statement_page_prunes_evidence_scan_on_txlog_lake(spark, tmp_path):
@@ -799,6 +839,7 @@ def test_statement_page_prunes_evidence_scan_on_txlog_lake(spark, tmp_path):
 
     q = HasAgent("ERK")
     want = get_statements(q, mem_lake, limit=3, ev_limit=4)
+    lake.prune_log.clear()
     got = get_statements(q, lake, limit=3, ev_limit=4)
     assert got.statements == want.statements and got.statements
     assert got.source_counts == want.source_counts
@@ -807,13 +848,14 @@ def test_statement_page_prunes_evidence_scan_on_txlog_lake(spark, tmp_path):
     # through skip_read (pruning ratio is layout-dependent at fixture
     # scale, so only routing is asserted here; the evidence-scan ratio
     # is asserted below via get_evidence_page)
-    assert lake.last_prune is not None
+    assert lake.prune_log[-1][0] == "reading_ref_link"
 
     # engagement, isolated per table: the evidence page opens fewer
     # files than the table holds, driven purely by the bloom words
     page = [r.mk_hash for r in get_hashes(q, mem_lake, limit=3).collect()]
+    lake.prune_log.clear()
     ev = get_evidence_page(lake, page, ev_limit=4)
-    fr, ft = lake.last_prune
+    _, fr, ft = lake.prune_log[-1]
     assert fr < ft, (fr, ft)
     # and the pruned rows equal the in-memory evidence page
     want_ev = {
@@ -823,17 +865,18 @@ def test_statement_page_prunes_evidence_scan_on_txlog_lake(spark, tmp_path):
     }
     assert {(r.mk_hash, r.id) for r in ev.collect()} == want_ev and want_ev
 
-    # an over-sized page must FALL BACK (never probe thousands of keys
-    # through the driver-side budget), still with identical results
-    from indra_db_spark.plans import shaping as shp
+    # a page longer than PRUNE_KEYS_MAX must take the broadcast
+    # semi-join (never probe that many keys through the driver-side
+    # budget), still with identical results
+    from indra_db_spark.plans.lake import PRUNE_KEYS_MAX
 
-    big = page + list(range(10_000_000, 10_000_000 + shp.PAGE_PRUNE_MAX))
-    lake.last_prune = None
+    big = page + list(range(10_000_000, 10_000_000 + PRUNE_KEYS_MAX))
+    lake.prune_log.clear()
     got_big = {
         (r.mk_hash, r.id)
         for r in get_evidence_page(lake, big, ev_limit=4).collect()
     }
-    assert got_big == want_ev and lake.last_prune is None
+    assert got_big == want_ev and not lake.prune_log
 
 
 def test_lake_open_tolerates_config_only_txlog_version(spark, tmp_path):

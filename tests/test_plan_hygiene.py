@@ -344,7 +344,7 @@ def test_local_artifact_df_bounds_slice_count(spark):
     measurement: 8–9 executor-seconds of wait for 0.1 s of CPU).  The
     constructor derives the slice count from the row count, capped at
     defaultParallelism."""
-    from indra_db_spark.operators.pq import (
+    from indra_db_spark.session import (
         _LOCAL_DF_ROWS_PER_SLICE,
         local_artifact_df,
     )

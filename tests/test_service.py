@@ -371,6 +371,38 @@ def test_rest_shim_round_trip(spark):
         server.shutdown()
 
 
+def test_rest_page_args_validated(spark):
+    """limit and offset come from outside: a negative one is a 400 with
+    an error payload, and limit=0 is an empty page on every result type
+    (never the whole result, which would bypass the MAX_STMTS clamp)."""
+    import json
+    from urllib.error import HTTPError
+    from urllib.request import urlopen
+
+    from indra_db_spark.service.rest import RESULT_TYPES, serve
+
+    lake, _, _ = fixture_lake(spark)
+    server = serve(lake)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+    try:
+        for rt in RESULT_TYPES:
+            for bad in ("limit=-1", "offset=-1"):
+                with pytest.raises(HTTPError) as e:
+                    urlopen(f"{base}/{rt}/from_agents?agent=MEK&{bad}")
+                assert e.value.code == 400 and "error" in json.load(e.value)
+            got = json.load(
+                urlopen(f"{base}/{rt}/from_agents?agent=MEK&limit=0")
+            )
+            key = "statements" if rt == "statements" else "results"
+            assert not got[key], rt
+            # the same query without the limit is not empty
+            full = json.load(urlopen(f"{base}/{rt}/from_agents?agent=MEK"))
+            assert full[key], rt
+    finally:
+        server.shutdown()
+
+
 def test_rest_route_parity(spark):
     """The reference's full route surface (api.py:359-418 dispatch +
     curation endpoints api.py:570-639): every result type and method the
