@@ -422,9 +422,11 @@ def main() -> None:
     # on (local[$SPARK_GRAFT_CPUS]); r13's 8-core scaling artifact recorded
     # os.cpu_count()=32 and the driver's scaling analysis came back empty
     # (r13 verdict, "what's wrong" #2).
-    cpus_effective = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-        os.cpu_count()
-    )
+    try:
+        cpus_effective = int(os.environ.get("SPARK_GRAFT_CPUS", "0"))
+    except ValueError:  # set but empty or not a number
+        cpus_effective = 0
+    cpus_effective = cpus_effective or os.cpu_count()
     env = {
         "load_start": load_start,
         "load_end": load_end,

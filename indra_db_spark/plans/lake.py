@@ -5,7 +5,11 @@ Holds one DataFrame per readonly table and serves them to the query algebra.
 Every leaf scan that narrows a table by box or point predicates reads
 through :meth:`ReadonlyLake.pruned`, which alone decides how the table is
 physically served (manifest-pruned txlog read, broadcast semi-join, or the
-filtered plain frame); callers never branch on it.
+filtered plain frame); callers never branch on it.  A txlog-served table
+is one parquet relation per pinned version, built at open
+(:meth:`plans.txlog.TxTable.pin`); a pruned scan narrows that relation to
+the files its manifest admits, so a request pays no manifest read,
+relation build or footer job.
 
 At scale: each table is a partitioned/bucketed Parquet dataset; the three
 agent-meta tables (name/text/other) are the reference's skew-busting
@@ -262,7 +266,9 @@ class ReadonlyLake:
         segment prefetch (round 12): a cold lake open over ~17 tables on
         an object store is otherwise that many serial manifest
         round-trip chains.  DataFrame construction stays on the calling
-        thread."""
+        thread: each table's frame is its pinned version's one relation
+        (:meth:`TxTable.pin`), which every :meth:`pruned` scan of the
+        table narrows."""
         from concurrent.futures import ThreadPoolExecutor
 
         tables: dict[str, DataFrame] = dict(extra or {})
@@ -282,7 +288,7 @@ class ReadonlyLake:
                 r for r in ex.map(_resolve, READONLY_SCHEMAS) if r
             ]
         for name, tx, v in resolved:  # ex.map preserves schema order
-            tables[name] = tx.read(v)
+            tables[name] = tx.pin(v)
             handles[name] = (tx, v)
         lake = cls(tables)
         lake._tx = handles
@@ -304,7 +310,8 @@ class ReadonlyLake:
           :data:`PRUNE_KEYS_MAX` keys per eq column →
           :meth:`TxTable.skip_read`: manifest range stats + bloom words
           decide per FILE, driver-side, before any scan task launches,
-          honoring the lake's pinned version (the reference answers the
+          and the pinned version's relation is narrowed to those files
+          with no filesystem call (the reference answers the
           same leaves through its clustered mk_hash / ev_count / agent-id
           btrees, readonly_schema.py:635-637).  Each such scan appends
           (name, files_read, files_total) to :attr:`prune_log`;
@@ -455,7 +462,7 @@ class ReadonlyLake:
         for name, kind, payload in decisions:
             if kind == "txlog":
                 tx, v = payload
-                tables[name] = tx.read(v)
+                tables[name] = tx.pin(v)
                 handles[name] = (tx, v)
             elif kind == "bucketed":
                 tables[name] = spark.table(f"{database}.{name}")

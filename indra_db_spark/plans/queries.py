@@ -928,7 +928,11 @@ class Intersection(_MergeQuery):
             result = result.join(
                 neg_union.select("mk_hash").distinct(), "mk_hash", "left_anti"
             )
-        return result.dropDuplicates(["mk_hash"])
+        # already distinct: every branch is (hashes() are distinct, and
+        # source_meta has one row per hash), and semi/anti joins keep
+        # the first branch's rows without repeating any — a dedup here
+        # would cost a shuffle, one Spark job per request
+        return result
 
 
 class Union(_MergeQuery):

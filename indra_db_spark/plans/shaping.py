@@ -11,7 +11,11 @@ Plan shapes:
   before the shuffle;
 - metadata: source_meta (src_json) and reading_ref_link (text refs) rows
   for the collected page, fetched by point lookup through
-  :meth:`ReadonlyLake.pruned` (query.py:493-517);
+  :meth:`ReadonlyLake.pruned` (query.py:493-517); each statement's JSON
+  is the pa_json of its first evidence row by id, taken in the evidence
+  plan's per-hash window, and the source_meta rows ride the evidence
+  collect, so a statement page costs three collects (page, evidence with
+  metadata, text refs);
 - JSON assembly happens driver-side on the collected page (the page is
   bounded by limit/ev_limit, so this is O(page), never O(corpus)).
 """
@@ -111,47 +115,48 @@ def get_statements(
             query_json=query.to_json(),
         )
     hashes = [r.mk_hash for r in page_rows]
-    spark = lake["source_meta"].sparkSession
-    # page-sized (≤ MAX_STMTS) driver-built frame: bound the slice count
-    # so its scans cost 1 Python-runner task, not one per core
-    from indra_db_spark.session import local_artifact_df
-
-    page_local = local_artifact_df(spark, page_rows, page.schema)
 
     # evidence + metadata scans restricted to the page's hashes — on a
     # txlog-served lake through the manifest's mk_hash bloom words, the
     # reference's evidence lateral join landing on the fast_raw_pa_link
     # mk_hash index (query.py:489-506, readonly_schema.py:320-357).
-    # ev_base (pre-filter, pre-limit) also feeds the pa_json pick below,
-    # so that aggregate is page-sized too.
     ev_base = lake.pruned("fast_raw_pa_link", eq={"mk_hash": hashes})
-    sm_page = lake.pruned("source_meta", eq={"mk_hash": hashes})
-
-    ev = _bound_evidence(lake, ev_base, ev_limit, evidence_filter)
-    ev = ev.select("mk_hash", "id", "raw_json", "src", "reading_id")
-
-    meta = page_local.join(
-        sm_page.select("mk_hash", "src_json", "type_num"),
-        "mk_hash",
-    ).join(
-        ev_base
-        .groupBy("mk_hash")
-        .agg(F.any_value("pa_json").alias("pa_json")),
-        "mk_hash",
-        "left",
+    # each statement's JSON is the pa_json of its first evidence row by
+    # id BEFORE the filter and ev_limit, read off the evidence plan's
+    # per-hash window: row 1 always survives a bare ev_limit >= 1, and
+    # where a filter or ev_limit=0 may drop it, a branch carries the head
+    # rows alone.  The page's source_meta rows ride the same collect as
+    # one more branch, so evidence, statement JSON and source counts
+    # cost one action.
+    ev_base = ev_base.withColumn(
+        "_rn",
+        F.row_number().over(Window.partitionBy("mk_hash").orderBy("id")),
     )
-
-    # ---- driver-side assembly (bounded by the page size)
-    # meta and ev are independent page-bounded plans; their collects are
-    # two of the route's four serial driver round trips — overlap them
-    # (guide §2.6: the scheduler happily runs both jobs at once, actions
-    # are only sequential because the driver calls them sequentially)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_meta = pool.submit(meta.collect)
-        ev_rows = ev.collect()
-        meta_rows = f_meta.result()
+    head = F.col("_rn") == 1
+    parts = [
+        _bound_evidence(lake, ev_base, ev_limit, evidence_filter).select(
+            "mk_hash", "id", "raw_json", "src", "reading_id",
+            F.lit(True).alias("is_ev"),
+            head.alias("head"),
+            F.when(head, F.col("pa_json")).alias("pa_json"),
+        ),
+        lake.pruned("source_meta", eq={"mk_hash": hashes}).select(
+            "mk_hash", "src_json", F.lit(True).alias("meta")
+        ),
+    ]
+    if evidence_filter is not None or ev_limit == 0:
+        parts.append(
+            ev_base.filter(head).select(
+                "mk_hash", F.lit(True).alias("head"), "pa_json"
+            )
+        )
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p, allowMissingColumns=True)
+    rows = rows.collect()
+    src_by_hash = {r.mk_hash: r.src_json for r in rows if r.meta}
+    pa_by_hash = {r.mk_hash: r.pa_json for r in rows if r.head}
+    ev_rows = [r for r in rows if r.is_ev]
     # text-ref fetch: the collected evidence's reading_ids are a BOUNDED
     # point set (≤ page × ev_limit), so the reading_ref_link rows come
     # by point lookup too (rid ranges/blooms on a txlog-served lake)
@@ -171,11 +176,14 @@ def get_statements(
 
     statements: dict[int, dict] = {}
     source_counts: dict[int, dict] = {}
-    for r in meta_rows:
-        stmt = json.loads(bytes(r.pa_json).decode()) if r.pa_json else {}
-        stmt["matches_hash"] = r.mk_hash
+    for h in hashes:
+        if h not in src_by_hash:
+            continue
+        pa_json = pa_by_hash.get(h)
+        stmt = json.loads(bytes(pa_json).decode()) if pa_json else {}
+        stmt["matches_hash"] = h
         stmt["evidence"] = []
-        for e in sorted(ev_by_hash.get(r.mk_hash, []), key=lambda x: x.id):
+        for e in sorted(ev_by_hash.get(h, []), key=lambda x: x.id):
             ev_json = json.loads(bytes(e.raw_json).decode()) if e.raw_json else {}
             ev_json.setdefault("annotations", {})["source_api"] = e.src
             ref = (
@@ -196,8 +204,8 @@ def get_statements(
                 if v is not None
             }
             stmt["evidence"].append(ev_json)
-        statements[r.mk_hash] = stmt
-        source_counts[r.mk_hash] = dict(r.src_json) if r.src_json else {}
+        statements[h] = stmt
+        source_counts[h] = dict(src_by_hash[h]) if src_by_hash[h] else {}
 
     return StatementQueryResult(
         statements=statements,
@@ -533,9 +541,13 @@ class EvidenceFilter:
                     return None
                 out = ids if out is None else out.unionByName(ids)
             return out.distinct()
+        return self._leaf_rows(lake, ev).select("id")
+
+    def _leaf_rows(self, lake: ReadonlyLake, ev: DataFrame) -> DataFrame:
+        """The rows of ``ev`` satisfying this leaf clause."""
         method, args = self.clause
         if method == "source":
-            return ev.filter(F.col("src").isin(args)).select("id")
+            return ev.filter(F.col("src").isin(args))
         if method == "papers":
             from indra_db_spark.plans.queries import FromPapers
 
@@ -545,27 +557,37 @@ class EvidenceFilter:
                 .filter(pred)
                 .select(F.col("rid").alias("reading_id"))
             )
-            return ev.join(F.broadcast(rids), "reading_id", "left_semi").select("id")
+            return ev.join(F.broadcast(rids), "reading_id", "left_semi")
         if method == "mesh":
-            terms = [int(m[1:]) for m in args if m.startswith("D")]
-            concepts = [int(m[1:]) for m in args if m.startswith("C")]
-            out = None
-            for nums, table in (
-                (terms, "raw_stmt_mesh_terms"),
-                (concepts, "raw_stmt_mesh_concepts"),
+            sids = None
+            for prefix, table in (
+                ("D", "raw_stmt_mesh_terms"),
+                ("C", "raw_stmt_mesh_concepts"),
             ):
+                nums = [int(m[1:]) for m in args if m.startswith(prefix)]
                 if not nums:
                     continue
-                sids = (
+                part = (
                     lake[table]
                     .filter(F.col("mesh_num").isin(nums))
                     .select(F.col("sid").alias("id"))
                 )
-                ids = ev.join(sids, "id", "left_semi").select("id")
-                out = ids if out is None else out.unionByName(ids).distinct()
-            return out if out is not None else ev.filter(F.lit(False)).select("id")
+                sids = part if sids is None else sids.unionByName(part)
+            if sids is None:
+                return ev.filter(F.lit(False))
+            return ev.join(sids, "id", "left_semi")
         raise ValueError(f"unknown evidence clause {method}")
 
     def apply(self, lake: ReadonlyLake, ev: DataFrame) -> DataFrame:
+        """The rows of ``ev`` satisfying the tree.  A leaf or a
+        conjunction filters ``ev`` directly — no id set joined back to
+        ``ev``, which would shuffle it once more; only a disjunction
+        collects its children's ids."""
+        if self.kind == "leaf":
+            return self._leaf_rows(lake, ev)
+        if self.kind == "and":
+            for c in self.children:
+                ev = c.apply(lake, ev)
+            return ev
         ids = self._keep_ids(lake, ev)
         return ev if ids is None else ev.join(ids, "id", "left_semi")

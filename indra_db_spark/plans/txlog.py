@@ -20,7 +20,11 @@ commits, Iceberg's snapshot manifests), reduced to what this lake needs:
 - Readers resolve the latest version once and scan exactly those files:
   snapshot isolation by construction.  Data files are never mutated and
   never visible before their commit, so a reader can hold a snapshot
-  across any number of concurrent commits.
+  across any number of concurrent commits.  A serving reader pins a
+  version (:meth:`TxTable.pin`): its manifest and one parquet relation
+  over its files are resolved once, and every pruned read at it
+  (:meth:`TxTable.skip_read`) narrows that relation driver-side.  The
+  first append records the schema, so opening a table reads no footer.
 - Writers commit OPTIMISTICALLY: stage immutable data files under
   ``data/`` with UUID names, then claim version N+1 by atomically
   creating the next version file through a pluggable :class:`LogStore`
@@ -62,6 +66,7 @@ from __future__ import annotations
 
 import bisect
 import json
+import math
 import os
 import time
 import uuid
@@ -181,6 +186,39 @@ def eq_lists(eq: dict | None) -> dict[str, list]:
     }
 
 
+def _sql_literal(v) -> str | None:
+    """``v`` spelled as the Spark SQL literal of the type ``F.lit(v)``
+    gives it, or None when it has no such spelling here."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        return str(v) if -(1 << 63) <= v < 1 << 63 else None
+    if isinstance(v, float):
+        return f"{v!r}D" if math.isfinite(v) else None
+    if isinstance(v, str) and "'" not in v and "\\" not in v:
+        # no escapes: their meaning depends on a parser setting
+        return f"'{v}'"
+    return None
+
+
+def isin(c: str, vals: list) -> Column:
+    """``F.col(c).isin(vals)`` built in ONE JVM call: SQL IN-list text
+    when ``c`` is a plain (optionally dotted) name and every value has
+    an exact literal spelling.  ``isin`` itself makes one py4j round
+    trip per value, which a page-sized key list pays thousands of
+    times per request."""
+    from pyspark.sql import functions as F
+
+    lits = [_sql_literal(v) for v in vals]
+    parts = c.split(".")
+    if not vals or None in lits or not all(p.isidentifier() for p in parts):
+        return F.col(c).isin(vals)
+    name = ".".join(f"`{p}`" for p in parts)
+    return F.expr(f"{name} IN ({', '.join(lits)})")
+
+
 def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
     """The EXACT predicate of a box/point probe: ``lo <= col <= hi`` per
     ``boxes`` entry (a None edge is open) AND ``col IN vals`` per
@@ -197,9 +235,7 @@ def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
             cond = cond & (F.col(c) <= F.lit(hi))
     for c, vals in eqs.items():
         cond = cond & (
-            (F.col(c) == F.lit(vals[0]))
-            if len(vals) == 1
-            else F.col(c).isin(vals)
+            (F.col(c) == F.lit(vals[0])) if len(vals) == 1 else isin(c, vals)
         )
     return cond
 
@@ -463,6 +499,28 @@ def _json_safe(v):
     return v if isinstance(v, (int, float, str, bool)) or v is None else str(v)
 
 
+def _nullable(t):
+    """A schema's JSON (``StructType.jsonValue()``) with every field,
+    array element and map value nullable — the schema Spark reads back
+    from a parquet footer, so recording it at the first append leaves
+    every later schema check as it was when the footer decided."""
+    if not isinstance(t, dict):
+        return t
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])}
+            for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True,
+                "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True,
+                "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"])}
+    return t  # udt and other leaf types
+
+
 def _cache_put(cache: dict, key, value, cap: int = 4096) -> None:
     """Bounded cache insert: full clear at ``cap`` — crude but correct,
     since every cached source here is immutable (uuid-named segments,
@@ -548,6 +606,13 @@ class TxTable:
         # sizes never change — cache getFileStatus results per process
         # instead of re-issuing serial RPCs on every DV-carrying read
         self._size_cache: dict[str, int] = {}
+        # serving state of committed versions, which never change: the
+        # raw manifest bodies skip_read/pin resolved, and the parquet
+        # relation over each pinned version's files (:meth:`pin`) — a
+        # skip_read at a pinned version makes no filesystem call, builds
+        # no relation and runs no footer job
+        self._bodies: dict[int, dict] = {}
+        self._relations: dict[int, DataFrame] = {}
 
     # ---- log primitives -------------------------------------------------
 
@@ -647,20 +712,32 @@ class TxTable:
         For timestamp/config walks that only need body-level keys."""
         return self._read_log_json(f"v{v:012d}.json")
 
+    def _body(self, v: int) -> dict:
+        """The raw manifest body of committed version ``v``, read once
+        per process (a committed version never changes).  Read-only:
+        :meth:`_read_version` expands a fresh copy."""
+        body = self._bodies.get(v)
+        if body is None:
+            body = self._read_version_raw(v)
+            _cache_put(self._bodies, v, body, cap=64)
+        return body
+
     def _read_version(self, v: int) -> dict:
         body = self._read_version_raw(v)
         if "files" not in body:
             # segmented manifest: expand the segment references so every
             # consumer keeps seeing the flat list; "segments" stays on the
             # body for the writer-side carry-forward
-            segs = body.get("segments", ())
-            missing = [s for s in segs if s not in self._seg_cache]
-            if len(missing) > 3:
-                self._prefetch_segments(missing)
-            body["files"] = [
-                f for s in segs for f in self._read_segment(s)
-            ]
+            body["files"] = self._segment_files(body)
         return body
+
+    def _segment_files(self, body: dict) -> list[str]:
+        """The flat file list of a segmented manifest body."""
+        segs = body.get("segments", ())
+        missing = [s for s in segs if s not in self._seg_cache]
+        if len(missing) > 3:
+            self._prefetch_segments(missing)
+        return [f for s in segs for f in self._read_segment(s)]
 
     def snapshot(self) -> tuple[int, list[str]]:
         """(version, live file names) of the latest committed version;
@@ -1355,7 +1432,19 @@ class TxTable:
         count (pre-r11 tables) gate on cached file sizes with a
         deliberately low byte ceiling.  Past the gate the planner's
         choice stands."""
-        df = self._read_files(names, schema_json)
+        return self._with_dv(
+            self._read_files(names, schema_json), names, dv, dv_rows
+        )
+
+    def _with_dv(
+        self,
+        df: DataFrame,
+        names: list[str],
+        dv: dict,
+        dv_rows: dict[str, int] | None,
+    ) -> DataFrame:
+        """``df`` (rows of the files ``names``) with those files'
+        deletion vectors applied — see :meth:`_read_files_dv`."""
         rel = sorted({n for f in names for n in dv.get(f, [])})
         if not rel:
             return df
@@ -1438,8 +1527,9 @@ class TxTable:
         """Enforce write-time schema compatibility (the table formats'
         contract — a raw parquet directory would let a drifted producer
         silently fork the schema and corrupt every later read).  Returns
-        the evolved schema dict to record in the manifest (None = no
-        evolution needed).  ``merge_schema=False``: the incoming fields
+        the schema dict to record in the manifest: the table's own at
+        the first write, the evolved one after (None = no evolution
+        needed).  ``merge_schema=False``: the incoming fields
         must be exactly the table's (order-insensitive, nullability
         ignored).  ``merge_schema=True``: overlapping fields must keep
         their types; NEW columns append to the recorded union schema,
@@ -1447,7 +1537,9 @@ class TxTable:
         surface the new columns as nulls."""
         cur = self.table_schema()
         if cur is None:
-            return None  # first write defines the schema implicitly
+            # the first write records the schema, so readers open the
+            # table through it instead of inferring it from a footer
+            return _nullable(df.schema.jsonValue())
         cur_by_name = {f.name: f for f in cur.fields}
         new_by_name = {f.name: f for f in df.schema.fields}
         for name, f in new_by_name.items():
@@ -1644,8 +1736,9 @@ class TxTable:
         if txns.get(app_id, -1) >= batch_id:
             return None
         # streaming writers stay STRICT: a drifted producer must fail the
-        # batch, not silently evolve the table mid-stream
-        self._check_schema(df, merge_schema=False)
+        # batch, not silently evolve the table mid-stream (only a first
+        # write gets a schema back: the one it records)
+        first = self._check_schema(df, merge_schema=False)
         self._check_constraints(df, checked_cons, "append_batch")
         staged = self._stage(df)
         if _pre_commit_hook is not None:
@@ -1663,8 +1756,8 @@ class TxTable:
             merged = dict(txns)
             merged[app_id] = batch_id
             if self._try_claim(
-                base + 1, files + staged, "append", merged, schema, cons,
-                dv,
+                base + 1, files + staged, "append", merged,
+                self._union_schema_json(schema, first), cons, dv,
             ):
                 return base + 1
         raise RuntimeError(f"append_batch lost {max_retries} commit races")
@@ -2015,7 +2108,9 @@ class TxTable:
         (``set_stats_columns(..., bloom=...)``) proving absence for eq
         probes under any layout — then re-applies the exact predicate to
         the survivors, THROUGH their deletion vectors.  Returns
-        (result, files_read, files_total).
+        (result, files_read, files_total).  At a version :meth:`pin`
+        built, the survivors narrow the pinned relation and the manifest
+        comes from memory: no filesystem call, no relation build.
 
         Correctness never depends on the stats: a file is skipped only
         when its recorded [min, max] provably excludes the box, a file
@@ -2043,17 +2138,18 @@ class TxTable:
                 raise ValueError(f"skip_read eq[{c!r}] is an empty list")
         if not boxes and not eqs:
             raise ValueError("skip_read needs predicates and/or eq")
-        vs = self._versions()
-        if not vs:
-            # same contract as read(): an empty table is a clean error,
-            # never a made-up schema
-            raise NoCommittedData(f"{self.root} has no committed data")
+        if version is None or version not in self._bodies:
+            vs = self._versions()
+            if not vs:
+                # same contract as read(): an empty table is a clean
+                # error, never a made-up schema
+                raise NoCommittedData(f"{self.root} has no committed data")
+            if version is None:
+                version = vs[-1]
         # the RAW manifest, segments unresolved: segment-level pruning
         # must run BEFORE any segment is opened or the cold read path
         # stays O(all segments) driver RPCs no matter what it prunes
-        body = self._read_version_raw(
-            version if version is not None else vs[-1]
-        )
+        body = self._body(version)
 
         def _excludes(rng_edge, bound, flip: bool) -> bool:
             """True iff the comparison PROVES emptiness.  Cross-type
@@ -2288,12 +2384,20 @@ class TxTable:
             # exact residual filter empties it (files_read stays honest)
             survivors = files[:1]
         dv = body.get("dv", {})
-        df = self._read_files_dv(
-            survivors,
-            body.get("schema"),
-            {f: dv[f] for f in survivors if f in dv},
-            dv_rows=body.get("dv_rows"),
-        )
+        dv = {f: dv[f] for f in survivors if f in dv}
+        base = self._relations.get(version)
+        if base is None:
+            # an unpinned version: a relation over the survivors alone,
+            # so a cold probe opens only the segments it admitted
+            df = self._read_files_dv(
+                survivors, body.get("schema"), dv, body.get("dv_rows")
+            )
+        else:
+            # the pinned relation, narrowed to the survivors: Spark
+            # prunes files on _metadata.file_name while planning
+            if len(survivors) < files_total:
+                base = base.filter(isin("_metadata.file_name", survivors))
+            df = self._with_dv(base, survivors, dv, body.get("dv_rows"))
         return (
             df.filter(residual_filter(boxes, eqs)),
             len(survivors),
@@ -2688,6 +2792,27 @@ class TxTable:
             dv_rows=body.get("dv_rows"),
         )
 
+    def pin(self, version: int) -> DataFrame:
+        """:meth:`read` of committed ``version`` for serving: its parquet
+        relation is built ONCE per process (the manifest-recorded schema
+        spares the footer job) and every later :meth:`skip_read` at the
+        version narrows that same relation instead of building one over
+        its survivors — the per-request metadata cost of a pruned scan
+        is then the driver-side prune alone."""
+        body = self._body(version)
+        files = (
+            body["files"] if "files" in body else self._segment_files(body)
+        )
+        if not files:
+            raise NoCommittedData(f"{self.root} has no committed data")
+        base = self._relations.get(version)
+        if base is None:
+            base = self._read_files(files, body.get("schema"))
+            _cache_put(self._relations, version, base, cap=64)
+        return self._with_dv(
+            base, files, body.get("dv", {}), body.get("dv_rows")
+        )
+
     def version_at(self, ts_ms: int) -> int:
         """The latest version committed at-or-before ``ts_ms`` (epoch
         millis) — the resolution step of ``AS OF <timestamp>`` reads
@@ -2852,6 +2977,7 @@ class TxTable:
         reads); the retention horizon is vacuum's."""
         out: list[dict] = []
         prev: set[str] = set()
+        prev_schema = None
         for v in self._versions():
             body = self._read_version(v)
             files = set(body["files"])
@@ -2863,13 +2989,16 @@ class TxTable:
                     "n_files": len(files),
                     "n_added": len(files - prev),
                     "n_removed": len(prev - files),
-                    "schema_evolved": "schema" in body,
+                    # the first write records the schema; a later
+                    # version evolved it when its recorded one differs
+                    "schema_evolved": bool(out)
+                    and body.get("schema") != prev_schema,
                     "n_dv_files": sum(
                         len(v) for v in body.get("dv", {}).values()
                     ),
                 }
             )
-            prev = files
+            prev, prev_schema = files, body.get("schema")
         return out
 
     # ---- maintenance ----------------------------------------------------

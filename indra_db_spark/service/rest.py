@@ -48,6 +48,7 @@ censored from results.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -69,6 +70,7 @@ from indra_db_spark.plans.shaping import (
     get_relations,
     get_statements,
 )
+from indra_db_spark.plans.txlog import isin
 from indra_db_spark.service.params import (
     MAX_STMTS,
     WebQueryError,
@@ -80,6 +82,8 @@ from indra_db_spark.service.params import (
 from pyspark.sql import functions as F
 
 from indra_db_spark.functions.english import meta_english_expr, render_english
+
+log = logging.getLogger(__name__)
 
 RESULT_TYPES = ("statements", "hashes", "interactions", "relations", "agents")
 
@@ -198,9 +202,7 @@ def make_handler(
                 ):
                     page_hashes = [int(h) for h in out["statements"]]
                     counts = curation_counts(
-                        curation.df().filter(
-                            F.col("pa_hash").isin(page_hashes)
-                        )
+                        curation.df().filter(isin("pa_hash", page_hashes))
                     ).collect()
                     out["num_curations"] = {
                         str(r.pa_hash): r.curation_count for r in counts
@@ -384,6 +386,19 @@ def make_handler(
                 # ValueError/KeyError cover malformed query params (e.g. a
                 # non-integer limit) — same contract as do_POST
                 self._send(400, {"error": str(e)})
+            except Exception as e:  # noqa: BLE001 — see _fail
+                self._fail(e)
+
+        def _fail(self, e: Exception) -> None:
+            """Answer an engine fault (an AnalysisException, a
+            SparkException, a data file gone missing) with a JSON 500
+            instead of dropping the connection, and log its traceback."""
+            log.exception("%s %s failed", self.command, self.path)
+            msg = str(e).strip().splitlines()
+            self._send(
+                500,
+                {"error": f"{type(e).__name__}: {msg[0] if msg else ''}"},
+            )
 
         def _ground(self, qs) -> None:
             """GET /ground?agent=<text> (reference api.py:199-206: the
@@ -527,6 +542,8 @@ def make_handler(
                 self._send(404, {"error": f"no route {url.path}"})
             except (WebQueryError, KeyError, ValueError) as e:
                 self._send(400, {"error": str(e)})
+            except Exception as e:  # noqa: BLE001 — see _fail
+                self._fail(e)
 
         def _expand(self, body: dict, qs) -> None:
             """POST /expand (reference api.py:421-500): drill one

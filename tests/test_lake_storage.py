@@ -904,3 +904,118 @@ def test_lake_open_tolerates_config_only_txlog_version(spark, tmp_path):
         opened["source_meta"].count() == mem_lake["source_meta"].count()
     )
     assert "source_meta" not in opened._tx  # served from plain parquet
+
+
+@pytest.fixture(scope="module")
+def fresh_tx_lake(spark, tmp_path_factory):
+    """A fixture lake committed by write_txlog(stats=True) in this
+    process and opened again with from_txlog: (in-memory lake, root)."""
+    mem_lake, _, _ = fixture_lake(spark)
+    root = str(tmp_path_factory.mktemp("txfresh") / "lake")
+    mem_lake.write_txlog(spark, root, stats=True)
+    return mem_lake, root
+
+
+def _jobs(spark) -> int:
+    """Jobs the scheduler has started so far: a window of two readings
+    holds every job launched in between, from any thread."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_txlog_open_and_algebra_plans_run_no_job(spark, fresh_tx_lake):
+    """The manifests of a freshly written lake record each table's
+    schema, so opening it reads no footer, and a pinned table's pruned
+    scan narrows the relation built at open: opening the lake and
+    building the hash plan of every algebra leaf, an Intersection and a
+    Union launches no Spark job."""
+    from indra_db_spark.plans.queries import (
+        FromAgentJson,
+        FromMeshIds,
+        FromPapers,
+        HasDatabases,
+        HasEvidenceBound,
+        HasHash,
+        HasNumAgents,
+        HasNumEvidence,
+        HasOnlySource,
+        HasReadings,
+        HasSources,
+    )
+
+    mem_lake, root = fresh_tx_lake
+    h = mem_lake["source_meta"].select("mk_hash").first()[0]
+    lo = _jobs(spark)
+    lake = ReadonlyLake.from_txlog(spark, root)
+    leaves = [
+        HasHash([h]), HasSources(["reach"]), HasOnlySource("reach"),
+        HasReadings(), HasDatabases(), HasType(["Phosphorylation"]),
+        HasNumAgents([2]), HasNumEvidence([1]),
+        HasEvidenceBound([">= 2"]), HasAgent("MEK"),
+        HasAgent("ERK", role="SUBJECT"), FromMeshIds(["D000001"]),
+        FromPapers([("pmid", "70001"), ("trid", 3)]),
+        FromAgentJson({"0": "MEK", "1": "ERK"}),
+    ]
+    plans = [q.hashes(lake) for q in leaves]
+    plans.append((leaves[0] & leaves[9] & leaves[12]).hashes(lake))
+    plans.append((leaves[5] | leaves[9] | leaves[11]).hashes(lake))
+    assert _jobs(spark) == lo
+    assert len(lake.prune_log) > 3  # the leaves took the pinned scans
+    want = get_hashes(HasAgent("MEK") & HasType(["Phosphorylation"]), mem_lake)
+    got = get_hashes(HasAgent("MEK") & HasType(["Phosphorylation"]), lake)
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_statement_page_jobs_keep_the_callers_job_group(
+    spark, fresh_tx_lake
+):
+    """Every job of a statement page — the one its pool thread launches
+    included — runs in the caller's job group, so the group names and
+    cancels the whole page; with and without an evidence filter."""
+    from indra_db_spark.plans.shaping import EvidenceFilter, get_statements
+
+    _, root = fresh_tx_lake
+    lake = ReadonlyLake.from_txlog(spark, root)
+    sc = spark.sparkContext
+    for evf in (None, EvidenceFilter.has_source(["reach"])):
+        sc.setJobGroup("page-group", "statement page")
+        try:
+            lo = _jobs(spark)
+            got = get_statements(
+                HasAgent("MEK"), lake, limit=3, ev_limit=2,
+                evidence_filter=evf,
+            )
+            hi = _jobs(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert got.statements
+        grouped = set(sc.statusTracker().getJobIdsForGroup("page-group"))
+        assert hi > lo and set(range(lo, hi)) <= grouped
+
+
+def test_statement_page_keeps_statement_json_under_filters(
+    spark, fresh_tx_lake
+):
+    """The statement JSON comes from each hash's first evidence row by
+    id before any filtering: an evidence filter that drops every row of
+    a statement, or ev_limit=0, leaves the statement and its JSON."""
+    from indra_db_spark.plans.shaping import EvidenceFilter, get_statements
+
+    mem_lake, root = fresh_tx_lake
+    lake = ReadonlyLake.from_txlog(spark, root)
+    q = HasAgent("MEK")
+    full = get_statements(q, mem_lake, limit=5, ev_limit=None)
+    assert full.statements
+    for kw in (
+        {"ev_limit": 0},
+        {"ev_limit": 2, "evidence_filter": EvidenceFilter.has_source(["no-such"])},
+        {"ev_limit": 2, "evidence_filter": EvidenceFilter.has_source(["reach"])},
+    ):
+        for lk in (mem_lake, lake):
+            got = get_statements(q, lk, limit=5, **kw)
+            assert list(got.statements) == list(full.statements)
+            for h, stmt in got.statements.items():
+                want = {k: v for k, v in full.statements[h].items()
+                        if k != "evidence"}
+                assert {k: v for k, v in stmt.items()
+                        if k != "evidence"} == want
+                assert len(stmt["evidence"]) <= kw["ev_limit"]

@@ -819,3 +819,50 @@ def test_data_vis_asset_server(spark):
                 assert e.code == 404, bad
     finally:
         server.shutdown()
+
+
+def test_rest_answers_engine_faults_with_500(spark, tmp_path):
+    """A request that fails inside Spark — here a committed data file of
+    a served txlog lake was deleted under it — gets a JSON 500 instead of
+    a dropped connection, and the server keeps answering."""
+    import glob
+    import json
+    import os
+    from urllib.error import HTTPError
+    from urllib.request import Request, urlopen
+
+    from indra_db_spark.plans.fixtures import fixture_lake
+    from indra_db_spark.plans.lake import ReadonlyLake
+    from indra_db_spark.service.rest import serve
+
+    mem_lake, _, _ = fixture_lake(spark)
+    root = str(tmp_path / "lake")
+    mem_lake.write_txlog(spark, root, stats=True)
+    lake = ReadonlyLake.from_txlog(spark, root)
+    server = serve(lake)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+    try:
+        page = f"{base}/statements/from_agents?agent=MEK&limit=2&ev_limit=3"
+        assert json.load(urlopen(page))["statements"]
+        for f in glob.glob(f"{root}/source_meta/data/*.parquet"):
+            os.remove(f)
+        for req in (
+            page,
+            Request(
+                f"{base}/hashes/from_hashes",
+                data=json.dumps(
+                    {"hashes": [lake["name_meta"].first().mk_hash]}
+                ).encode(),
+                method="POST",
+            ),
+        ):
+            try:
+                urlopen(req)
+                raise AssertionError("a request over a lost file should fail")
+            except HTTPError as e:
+                assert e.code == 500
+                assert json.load(e)["error"]
+        assert json.load(urlopen(f"{base}/health")) == {"status": "ok"}
+    finally:
+        server.shutdown()

@@ -2879,3 +2879,101 @@ def test_index_tx_table_rescans_untagged_blooms(spark, tmp_path):
     # the rescan rebuilt scheme-correct words: still prunes, never wrong
     assert n_total == 2 and n_read == 1
     assert [r.k for r in out.collect()] == [3]
+
+
+class _CountingFs:
+    """A Hadoop FileSystem stand-in that records every call."""
+
+    def __init__(self, fs):
+        self._inner, self.calls = fs, []
+
+    def __getattr__(self, name):
+        self.calls.append(name)
+        return getattr(self._inner, name)
+
+
+def test_pinned_skip_read_makes_no_filesystem_call(spark, tmp_path,
+                                                   monkeypatch):
+    """A committed version never changes, so once pinned a skip_read at
+    it resolves from memory: no log listing, no manifest read, no other
+    filesystem call and builds no relation — only the driver-side prune
+    — and its rows equal the version's rows filtered the same way."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.set_stats_columns("k", bloom=("k",))
+    t.append(_df(spark, 0, 40).repartitionByRange(4, "k"))
+    v = t.append(_df(spark, 40, 60, tag="x").coalesce(1))
+    t.pin(v)
+    t.skip_read(eq={"k": [3, 45]}, version=v)  # first read fills caches
+    reads = []
+    real_read = t._read_log_json
+    monkeypatch.setattr(
+        t, "_read_log_json", lambda name: reads.append(name) or real_read(name)
+    )
+    fs = _CountingFs(t._fs)
+    monkeypatch.setattr(t, "_fs", fs)
+    builds = []
+    monkeypatch.setattr(t, "_read_files", lambda *a: builds.append(a))
+    df, fr, ft = t.skip_read(eq={"k": [3, 45]}, version=v)
+    assert reads == [] and fs.calls == [] and builds == []
+    assert (fr, ft) == (2, 5)
+    assert sorted(r.k for r in df.collect()) == [3, 45]
+    df, fr, ft = t.skip_read(predicates={"k": (None, 100)}, version=v)
+    assert fr == ft == 5 and df.count() == 60  # all survive: no filter
+
+
+def test_pinned_skip_read_applies_deletion_vectors(spark, tmp_path):
+    """At a pinned version carrying deletion vectors, the narrowed
+    relation still applies the survivors' vectors: skip_read equals
+    read(v) filtered the same way, deleted rows included in the probe."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    t.set_stats_columns("k", bloom=("k",))
+    t.append(_df(spark, 0, 40).repartitionByRange(4, "k"))
+    v = t.delete_where(F.col("k").isin(3, 4, 30), mode="dv")
+    assert t._read_version(v).get("dv")
+    t.pin(v)
+    probe = [2, 3, 4, 5, 30, 31]
+    want = sorted(
+        r.k for r in t.read(v).filter(F.col("k").isin(probe)).collect()
+    )
+    df, fr, ft = t.skip_read(eq={"k": probe}, version=v)
+    assert fr < ft
+    assert sorted(r.k for r in df.collect()) == want == [2, 5, 31]
+
+
+def test_first_append_records_schema(spark, tmp_path):
+    """The first append records the table schema (fully nullable, as a
+    footer would read), so a reader opens the table through it; later
+    appends are checked against it exactly as before."""
+    t = TxTable(spark, str(tmp_path / "t"))
+    df = spark.createDataFrame([(1, [1])], "k bigint not null, a array<int>")
+    t.append(df)
+    schema = t._read_version(1)["schema"]
+    assert all(f["nullable"] for f in schema["fields"])
+    assert t.table_schema() == spark.read.parquet(
+        f"{t.root}/data/{t.snapshot()[1][0]}"
+    ).schema
+    t.append(spark.createDataFrame([(2, None)], "k bigint, a array<int>"))
+    assert t._read_version(2)["schema"] == schema
+    assert [h["schema_evolved"] for h in t.history()] == [False, False]
+
+
+def test_residual_in_list_keeps_isin_semantics(spark):
+    """residual_filter's one-call IN list keeps F.isin's exact answer
+    for every literal kind it spells, and falls back to isin for values
+    it cannot spell (quotes, backslashes, NaN)."""
+    rows = [
+        (1, "a", 1.5, True), (2, "o'k", float("nan"), False),
+        (3, "b\\c", -0.25, None), (None, None, None, None),
+        (3_000_000_000, "", 1e-05, True),
+    ]
+    df = spark.createDataFrame(rows, "i bigint, s string, d double, b boolean")
+    cases = {
+        "i": [1, 3_000_000_000, -7, None],
+        "s": ["a", "o'k", "b\\c", ""],
+        "d": [1.5, float("nan"), 1e-05],
+        "b": [True, None],
+    }
+    for c, vals in cases.items():
+        got = df.filter(txlog.residual_filter({}, {c: vals})).collect()
+        want = df.filter(F.col(c).isin(vals)).collect()
+        assert sorted(map(str, got)) == sorted(map(str, want)) and want, c
