@@ -1,13 +1,13 @@
 """Scheme-aware filesystem helpers for driver-side metadata decisions.
 
-The serving entry points (:meth:`plans.lake.ReadonlyLake.open`, the
-corpus-pipeline stage barrier) make small driver-side filesystem checks —
-"does this table dir exist", "how many data bytes does it hold", "delete
-this scratch dir".  On a laptop those are ``os.*`` calls; on the 100-TB
-tier the lake root is ``s3a://`` / ``hdfs://`` / ``abfs://`` and the same
-checks must route through the Hadoop ``FileSystem`` API that the
-transaction log already uses (``plans/txlog.py``), or the entry point
-simply cannot open the deployment it was designed for (r8 verdict #1).
+The serving entry point (:meth:`plans.lake.ReadonlyLake.from_txlog`, which
+asks "does this table have a log directory") and the corpus-pipeline stage
+barrier ("delete this scratch dir") make small driver-side filesystem
+checks.  On a laptop those are ``os.*`` calls; on the 100-TB tier the lake
+root is ``s3a://`` / ``hdfs://`` / ``abfs://`` and the same checks must
+route through the Hadoop ``FileSystem`` API that the transaction log
+already uses (``plans/txlog.py``), or the entry point simply cannot open
+the deployment it was designed for (r8 verdict #1).
 
 Routing rule (same resolution discipline as ``TxTable.__init__``):
 
@@ -17,7 +17,7 @@ Routing rule (same resolution discipline as ``TxTable.__init__``):
   a cluster filesystem) → ``Path.getFileSystem(hadoopConf)``, so s3a/hdfs/
   abfs/gs resolve through whatever connector the cluster ships.
 
-These are METADATA operations (exists / list / content-summary / delete):
+These are METADATA operations (is-dir / mkdirs / delete):
 a handful of py4j calls per table open, never per row — the data path
 stays `spark.read.parquet`, which always went through Hadoop anyway.
 """
@@ -31,9 +31,7 @@ __all__ = [
     "scheme_of",
     "strip_file_scheme",
     "join",
-    "exists",
     "is_dir",
-    "dir_bytes",
     "delete",
     "mkdirs",
 ]
@@ -97,47 +95,11 @@ def _hadoop(spark, path: str):
     return fs, jpath
 
 
-def exists(spark, path: str) -> bool:
-    if _is_local(spark, path):
-        return os.path.exists(strip_file_scheme(path))
-    fs, p = _hadoop(spark, path)
-    return bool(fs.exists(p))
-
-
 def is_dir(spark, path: str) -> bool:
     if _is_local(spark, path):
         return os.path.isdir(strip_file_scheme(path))
     fs, p = _hadoop(spark, path)
     return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
-def dir_bytes(spark, path: str) -> int:
-    """Total bytes of DATA files under ``path`` (hidden ``.``/``_`` names
-    excluded — the same files every parquet reader ignores).  This is the
-    one statistic the layout chooser keys off; the remote branch walks the
-    recursive ``listFiles`` iterator, which on S3A is one LIST call per
-    1000 objects, not one RPC per file."""
-    if _is_local(spark, path):
-        lpath = strip_file_scheme(path)
-        total = 0
-        for dirpath, _dirs, files in os.walk(lpath):
-            for f in files:
-                if not f.startswith((".", "_")):
-                    try:
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-        return total
-    fs, p = _hadoop(spark, path)
-    if not fs.exists(p):
-        return 0
-    total = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        if not st.getPath().getName().startswith((".", "_")):
-            total += int(st.getLen())
-    return total
 
 
 def delete(spark, path: str) -> None:

@@ -1,20 +1,24 @@
-"""The readonly Parquet lake — the rebuild's counterpart of the reference's
+"""The readonly lake — the rebuild's counterpart of the reference's
 materialized ``readonly`` Postgres schema (SURVEY.md §1.4).
 
 Holds one DataFrame per readonly table and serves them to the query algebra.
-Every leaf scan that narrows a table by box or point predicates reads
-through :meth:`ReadonlyLake.pruned`, which alone decides how the table is
-physically served (manifest-pruned txlog read, broadcast semi-join, or the
-filtered plain frame); callers never branch on it.  A txlog-served table
-is one parquet relation per pinned version, built at open
-(:meth:`plans.txlog.TxTable.pin`); a pruned scan narrows that relation to
-the files its manifest admits, so a request pays no manifest read,
-relation build or footer job.
+A lake is written, released and opened through one storage layout: each
+table is a transaction-logged parquet table (:mod:`plans.txlog`) under
+``<root>/<table>``, committed by :meth:`ReadonlyLake.write_txlog` and opened
+at pinned versions by :meth:`ReadonlyLake.from_txlog`
+(:mod:`assembly.snapshot` adds the release record that names one version
+per table).  Every leaf scan that narrows a table by box or point
+predicates reads through :meth:`ReadonlyLake.pruned`, which alone decides
+how the table is physically served (manifest-pruned txlog read, broadcast
+semi-join, or the filtered in-memory frame); callers never branch on it.
+A txlog-served table is one parquet relation per pinned version, built at
+open (:meth:`plans.txlog.TxTable.pin`); a pruned scan narrows that
+relation to the files its manifest admits, so a request pays no manifest
+read, relation build or footer job.
 
-At scale: each table is a partitioned/bucketed Parquet dataset; the three
-agent-meta tables (name/text/other) are the reference's skew-busting
-partition of pa_meta by namespace (readonly_schema.py:991-1021) and keep
-that routing here.
+The three agent-meta tables (name/text/other) are the reference's
+skew-busting partition of pa_meta by namespace
+(readonly_schema.py:991-1021) and keep that routing here.
 """
 
 from __future__ import annotations
@@ -23,15 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from indra_db_spark.plans import fsutil
 from indra_db_spark.schemas import READONLY_SCHEMAS
-
-def _dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total bytes of data files under ``path`` — the one statistic the
-    layout chooser keys off.  Scheme-aware (r8 verdict #1): local roots
-    take the ``os.walk`` fast path, ``s3a://``/``hdfs://``/… roots walk
-    the Hadoop ``FileSystem`` recursive listing the txlog already routes
-    through — the chooser's docstring targets the 100-TB tier, so it has
-    to be able to open the filesystems where 100 TB actually lives."""
-    return fsutil.dir_bytes(spark, path)
 
 
 #: longest eq list :meth:`ReadonlyLake.pruned` probes through the txlog
@@ -42,38 +37,6 @@ def _dir_bytes(spark: SparkSession, path: str) -> int:
 #: residual ``isin`` costs seconds of py4j marshalling and an eq probe
 #: over that many keys admits nearly every file anyway.
 PRUNE_KEYS_MAX = 10_000
-
-
-def _txlog_handle(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    timestamp_ms: int | None = None,
-) -> tuple | None:
-    """(TxTable, pinned version) of the transaction-logged table at
-    ``path`` — ``timestamp_ms`` resolves ``AS OF``, else ``version``,
-    else the head — or None when the log serves no data there: no log
-    directory, zero commits (a writer created the dirs and crashed
-    before its first commit), or a CONFIG-ONLY pinned version
-    (set_stats_columns / add_check_constraint committed before the
-    first append, or a data-less restore target).  None means "does not
-    exist yet", never an error that bricks a whole lake open.  The pin
-    makes the lake's frame and every later :meth:`ReadonlyLake.pruned`
-    scan read the same snapshot even when a writer commits in
-    between."""
-    from indra_db_spark.plans.txlog import LOG_DIR, TxTable
-
-    if not fsutil.is_dir(spark, fsutil.join(path, LOG_DIR)):
-        return None
-    tx = TxTable(spark, path)
-    head, head_files = tx.snapshot()  # ONE resolution per table
-    if head == 0:
-        return None
-    v = tx.version_at(timestamp_ms) if timestamp_ms is not None else version
-    if v is None:
-        v = head
-    files = head_files if v == head else tx._read_version(v)["files"]
-    return (tx, v) if files else None
 
 
 #: tables every lake must provide for the query algebra
@@ -94,7 +57,7 @@ class ReadonlyLake:
             raise ValueError(f"readonly lake missing core tables: {missing}")
         self._tables = dict(tables)
         # txlog handles for tables served through the log (set by
-        # from_txlog/open): lets leaf scans route through manifest-stats
+        # from_txlog): lets leaf scans route through manifest-stats
         # pruning (TxTable.skip_read) — {name: (TxTable, pinned version)}
         self._tx: dict[str, tuple] = {}
         # rolling (table, files_read, files_total) log of recent
@@ -130,36 +93,6 @@ class ReadonlyLake:
         reference lacks — its only query language is the algebra)."""
         for name, df in self._tables.items():
             df.createOrReplaceTempView(f"{prefix}{name}")
-
-    @classmethod
-    def from_bucketed(
-        cls,
-        spark: SparkSession,
-        database: str = "indra_lake",
-        extra: dict[str, DataFrame] | None = None,
-    ) -> "ReadonlyLake":
-        """Serve the query algebra FROM the bucketed catalog tables written
-        by :meth:`write_bucketed` — every mk_hash join between lake tables
-        then plans with zero Exchange (the catalog carries the bucket
-        spec; a plain-parquet read of the same bytes cannot prove
-        co-location and must shuffle).  ``extra`` supplies the
-        non-mk_hash-keyed tables (raw_stmt_src, reading_ref_link, …) that
-        :meth:`write_bucketed` skips, when the algebra surface needs
-        them."""
-        tables: dict[str, DataFrame] = dict(extra or {})
-        for t in spark.catalog.listTables(database):
-            if t.name in READONLY_SCHEMAS:
-                tables[t.name] = spark.table(f"{database}.{t.name}")
-        return cls(tables)
-
-    @classmethod
-    def from_parquet(cls, spark: SparkSession, root: str) -> "ReadonlyLake":
-        tables = {}
-        for name in READONLY_SCHEMAS:
-            path = fsutil.join(root, name)
-            if fsutil.exists(spark, path):
-                tables[name] = spark.read.parquet(path)
-        return cls(tables)
 
     # ---- transaction-logged serving (r7 verdict #8) ----------------------
 
@@ -251,14 +184,18 @@ class ReadonlyLake:
     ) -> "ReadonlyLake":
         """Serve the query algebra FROM transaction-logged tables written
         by :meth:`write_txlog` — each table is one committed snapshot, so
-        a query never sees a half-landed release (the reference swaps in
+        a query never sees a half-landed commit (the reference swaps in
         a whole new readonly database per release for the same reason;
         the log gets that isolation incrementally).
 
-        ``version`` pins every table (int) or individual tables
-        ({name: version}); ``timestamp_ms`` resolves a per-table
+        ``version`` pins every table (int), or opens exactly the tables
+        a {name: version} dict names at those versions; ``timestamp_ms``
+        resolves a per-table
         ``AS OF <timestamp>`` via the commit stamps.  Omit both for the
-        latest snapshot of each table.
+        latest snapshot of each table; a served release opens at the
+        versions its release record names
+        (:func:`assembly.snapshot.load_release`), so it never mixes two
+        releases.
 
         The per-table METADATA resolution (log-dir existence, manifest
         read, segment prefetch, version pinning) runs 8-way concurrent —
@@ -271,22 +208,43 @@ class ReadonlyLake:
         table narrows."""
         from concurrent.futures import ThreadPoolExecutor
 
+        from indra_db_spark.plans.txlog import LOG_DIR, TxTable
+
         tables: dict[str, DataFrame] = dict(extra or {})
         handles: dict[str, tuple] = {}
 
         def _resolve(name: str):
-            handle = _txlog_handle(
-                spark,
-                fsutil.join(root, name),
-                version.get(name) if isinstance(version, dict) else version,
-                timestamp_ms,
-            )
-            return handle and (name, *handle)
+            # (name, TxTable, pinned version), or None when the log serves
+            # no data there: no log directory, zero commits (a writer
+            # created the dirs and crashed before its first commit), or a
+            # CONFIG-ONLY pinned version (set_stats_columns committed
+            # before the first append, or a data-less restore target).
+            # None means "does not exist yet", never an error that bricks
+            # the whole open.  The pin makes the lake's frame and every
+            # later pruned() scan read the same snapshot even when a
+            # writer commits in between.
+            path = fsutil.join(root, name)
+            if not fsutil.is_dir(spark, fsutil.join(path, LOG_DIR)):
+                return None
+            tx = TxTable(spark, path)
+            head, head_files = tx.snapshot()  # ONE resolution per table
+            if head == 0:
+                return None
+            if timestamp_ms is not None:
+                v = tx.version_at(timestamp_ms)
+            else:
+                v = version[name] if isinstance(version, dict) else version
+            if v is None:
+                v = head
+            files = head_files if v == head else tx._read_version(v)["files"]
+            return (name, tx, v) if files else None
 
+        names = [
+            n for n in READONLY_SCHEMAS
+            if not isinstance(version, dict) or n in version
+        ]
         with ThreadPoolExecutor(max_workers=8) as ex:
-            resolved = [
-                r for r in ex.map(_resolve, READONLY_SCHEMAS) if r
-            ]
+            resolved = [r for r in ex.map(_resolve, names) if r]
         for name, tx, v in resolved:  # ex.map preserves schema order
             tables[name] = tx.pin(v)
             handles[name] = (tx, v)
@@ -318,8 +276,8 @@ class ReadonlyLake:
         - a longer eq list → a broadcast semi-join against a driver-built
           key frame (probing that many keys would admit every file
           anyway and burn the driver-side probe budget doing it);
-        - a table with no txlog, or an empty eq list → the plain frame,
-          filtered;
+        - a table with no txlog (an in-memory lake, an ``extra``
+          frame), or an empty eq list → the plain frame, filtered;
         - neither predicates nor eq → the plain frame.
 
         Correctness never depends on the stats: the residual filter
@@ -362,186 +320,6 @@ class ReadonlyLake:
             df = df.join(F.broadcast(keys), c, "left_semi")
         return df.filter(residual_filter(boxes, eqs))
 
-    # ---- layout chooser (r7 verdict #7) ----------------------------------
-
-    #: per-table byte threshold below which the bucketed catalog path is a
-    #: measured PESSIMIZATION: tools/bucketed_bench.py (SCALING.md §1b)
-    #: shows catalog-table overhead dominating metadata-light scans
-    #: (0.17 s → 0.49 s, 0.76 s → 1.21 s at fixture scale) while the
-    #: byte-heavy join wins 3.7× (1.04 s → 0.28 s).  The crossover sits
-    #: where shuffle BYTES start to dominate the fixed 32-bucket task
-    #: fan-out; 256 MB/table (a few shuffle partitions' worth) is the
-    #: conservative edge of the measured win region.
-    BUCKETED_MIN_BYTES = 256 * 1024 * 1024
-
-    @classmethod
-    def open(
-        cls,
-        spark: SparkSession,
-        root: str | None = None,
-        database: str | None = None,
-        tx_root: str | None = None,
-        version: int | dict[str, int] | None = None,
-        timestamp_ms: int | None = None,
-        extra: dict[str, DataFrame] | None = None,
-    ) -> "ReadonlyLake":
-        """ONE serving entry point that picks the measured-fastest layout
-        per table (decision table in SCALING.md §1b), so callers don't
-        have to know the bench results:
-
-        1. ``version``/``timestamp_ms`` requested → the txlog snapshot at
-           ``tx_root`` (time travel exists only in the log; 2-4 also
-           assume no time pin).
-        2. table has a txlog at ``tx_root`` AND is still multi-writer →
-           read through the log (snapshot isolation is correctness, not a
-           speed knob).  :meth:`open` treats any table with a txlog as
-           such.
-        3. table registered bucketed in ``database`` AND its parquet
-           bytes ≥ :data:`BUCKETED_MIN_BYTES` → the bucketed catalog
-           table (co-located mk_hash joins, zero exchange — wins only
-           once shuffle bytes dominate the bucket fan-out).
-        4. otherwise → plain parquet under ``root`` (smallest constant
-           factors; the measured winner for small/metadata-light tiers).
-        """
-        from pyspark.errors import AnalysisException
-
-        tables: dict[str, DataFrame] = dict(extra or {})
-        handles: dict[str, tuple] = {}
-        pinned = version is not None or timestamp_ms is not None
-        if pinned and tx_root is None:
-            raise ValueError("version/timestamp pins need tx_root")
-        if pinned:
-            return cls.from_txlog(
-                spark, tx_root, version=version,
-                timestamp_ms=timestamp_ms, extra=extra,
-            )
-        bucketed_names = set()
-        if database is not None:
-            try:
-                bucketed_names = {
-                    t.name for t in spark.catalog.listTables(database)
-                }
-            except AnalysisException:  # database absent → no bucketed tier
-                bucketed_names = set()
-
-        # the per-table layout DECISION (existence probes, snapshot
-        # resolution, byte listing) runs 8-way concurrent like
-        # from_txlog's resolver — these are the round-trip-bound steps;
-        # DataFrame construction stays on the calling thread
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _decide(name: str):
-            if name in tables:
-                return None
-            plain_path = root and fsutil.join(root, name)
-            has_plain = bool(plain_path) and fsutil.exists(
-                spark, plain_path
-            )
-            # a table the log does not serve (no log, zero commits, or a
-            # config-only head) falls through to the other layouts
-            handle = tx_root and _txlog_handle(
-                spark, fsutil.join(tx_root, name)
-            )
-            if handle:
-                return name, "txlog", handle
-            if name in bucketed_names and (
-                not has_plain
-                or _dir_bytes(spark, plain_path) >= cls.BUCKETED_MIN_BYTES
-            ):
-                # the catalog copy serves when it's the ONLY copy, or
-                # when the table's bytes clear the measured crossover
-                return name, "bucketed", None
-            if has_plain:
-                return name, "plain", plain_path
-            return None
-
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            decisions = [
-                d for d in ex.map(_decide, READONLY_SCHEMAS) if d
-            ]
-        for name, kind, payload in decisions:
-            if kind == "txlog":
-                tx, v = payload
-                tables[name] = tx.pin(v)
-                handles[name] = (tx, v)
-            elif kind == "bucketed":
-                tables[name] = spark.table(f"{database}.{name}")
-            else:
-                tables[name] = spark.read.parquet(payload)
-        lake = cls(tables)
-        lake._tx = handles
-        return lake
-
-    def write_parquet(self, root: str, mode: str = "overwrite") -> None:
-        for name, df in self._tables.items():
-            df.write.mode(mode).parquet(fsutil.join(root, name))
-
-    #: tables served sorted by ev_count (the algebra's default sort key) —
-    #: range-partitioned + sorted files let parquet row-group min/max stats
-    #: prune top-k scans, replacing the reference's btree indexes + CLUSTER
-    #: (schemas/mixins.py:70-97, readonly_schema.py:635-637)
-    RANKED_TABLES = (
-        "name_meta", "text_meta", "other_meta", "source_meta",
-        "mesh_term_meta", "mesh_concept_meta", "agent_interactions",
-    )
-
-    def write_optimized(
-        self, root: str, mode: str = "overwrite", partitions: int = 32
-    ) -> None:
-        """At-scale physical layout: ranked tables range-partitioned on
-        descending ev_count and sorted within files; everything else
-        hash-partitioned on its join key so co-keyed joins between lake
-        tables shuffle one side at most."""
-        from pyspark.sql import functions as F
-
-        for name, df in self._tables.items():
-            if name in self.RANKED_TABLES:
-                out = df.repartitionByRange(
-                    partitions, F.desc("ev_count"), F.asc("mk_hash")
-                ).sortWithinPartitions(F.desc("ev_count"), F.asc("mk_hash"))
-            elif "mk_hash" in df.columns:
-                out = df.repartition(partitions, "mk_hash")
-            elif "sid" in df.columns:
-                out = df.repartition(partitions, "sid")
-            else:
-                out = df
-            out.write.mode(mode).parquet(fsutil.join(root, name))
-
-    def write_bucketed(
-        self,
-        spark: SparkSession,
-        database: str = "indra_lake",
-        buckets: int = 32,
-    ) -> list[str]:
-        """CO-LOCATED layout: every mk_hash-keyed table written as a
-        Spark BUCKETED table (``bucketBy(buckets, mk_hash)`` +
-        ``sortBy``), so joins between lake tables on the statement hash
-        need NO exchange at all — the bucket metadata proves both sides
-        share the partitioning, and the sorted buckets feed SortMergeJoin
-        without a sort.  This is the Spark-native replacement for the
-        reference's clustered btree indexes (readonly_schema.py:635-637),
-        and the step up from :meth:`write_optimized`'s hash-repartitioned
-        parquet, whose layout Spark cannot SEE at read time (a fresh scan
-        still plans an exchange; bucketing records it in the catalog).
-
-        The zero-exchange property is asserted in
-        tests/test_lake_storage.py, not just claimed.  Returns the
-        written table identifiers.
-        """
-        from indra_db_spark.sources.bucketed import write_bucketed
-
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-        written = []
-        for name, df in self._tables.items():
-            if "mk_hash" not in df.columns:
-                continue
-            ident = f"{database}.{name}"
-            write_bucketed(
-                df, ident, "mk_hash", buckets=buckets, sort_col="mk_hash"
-            )
-            written.append(ident)
-        return written
-
     @classmethod
     def from_rows(cls, spark: SparkSession, rows_by_table: dict[str, list]) -> "ReadonlyLake":
         """Build a lake from python row dicts (fixtures/tests)."""
@@ -552,247 +330,3 @@ class ReadonlyLake:
 
             tables[name] = local_artifact_df(spark, rows, schema)
         return cls(tables)
-
-
-#: name of the two-phase-commit record a swap leaves in the table dir
-#: while files move; starts with '_' so every parquet reader ignores it
-MANIFEST_NAME = "_compact_manifest.json"
-
-#: test seam: called with the leaf path at the last instant before the
-#: concurrent-writer fence re-lists the directory, so tests can land a
-#: racing write exactly where the fence must catch it
-_pre_fence_hook = None
-
-
-def _jpath(jvm, *parts):
-    p = jvm.org.apache.hadoop.fs.Path(parts[0])
-    for more in parts[1:]:
-        p = jvm.org.apache.hadoop.fs.Path(p, more)
-    return p
-
-
-def _write_manifest(fs, jvm, dpath, manifest: dict) -> None:
-    import json
-
-    out = fs.create(_jpath(jvm, dpath, MANIFEST_NAME), True)
-    out.write(bytearray(json.dumps(manifest).encode("utf-8")))
-    out.close()
-
-
-def _read_manifest(fs, jvm, dpath) -> dict | None:
-    import json
-
-    mpath = _jpath(jvm, dpath, MANIFEST_NAME)
-    if not fs.exists(mpath):
-        return None
-    stream = fs.open(mpath)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
-
-
-def _recover_swap(fs, jvm, dpath: str) -> str | None:
-    """Finish or undo an interrupted two-phase swap in ``dpath``.
-
-    The manifest lists ``add`` (compacted files being moved in) and
-    ``remove`` (superseded files).  If every ``add`` file made it into the
-    dir the swap ROLLS FORWARD (delete the leftovers in ``remove``);
-    otherwise it ROLLS BACK (delete whichever ``add`` files landed) — in
-    both cases the dir ends holding exactly one complete copy of the
-    data, which is the invariant the manifest exists to protect.
-    """
-    manifest = _read_manifest(fs, jvm, dpath)
-    if manifest is None:
-        return None
-    adds, removes = manifest["add"], manifest["remove"]
-    have_all = all(fs.exists(_jpath(jvm, dpath, n)) for n in adds)
-    victims = removes if have_all else adds
-    for name in victims:
-        p = _jpath(jvm, dpath, name)
-        if fs.exists(p):
-            fs.delete(p, False)
-    fs.delete(_jpath(jvm, dpath, MANIFEST_NAME), False)
-    return "rolled_forward" if have_all else "rolled_back"
-
-
-def _compact_leaf(
-    spark: SparkSession,
-    fs,
-    jvm,
-    dpath: str,
-    target_file_mb: int,
-    sort_within: list[str] | None,
-) -> dict:
-    """Compact one FLAT parquet directory via a manifest two-phase swap.
-
-    Unlike delete-dir-then-rename-tmp (which leaves a window where the
-    table's only copy lives at a tmp path), the swap here moves the
-    compacted files INTO the live dir under their fresh unique names and
-    only then deletes the superseded files, with a manifest written first
-    as the commit record.  A crash at any point leaves the dir with at
-    least one complete copy — worst case duplicates plus a manifest that
-    :func:`_recover_swap` rolls forward or back deterministically.  The
-    per-file moves are renames (atomic on HDFS/local, copy+delete on bare
-    object stores — where a real deployment layers a table format's
-    transaction log; the manifest is the single-writer version of exactly
-    that log).  For tables with genuinely CONCURRENT writers, use
-    :class:`plans.txlog.TxTable`, whose versioned log makes compaction an
-    optimistic commit that rebases over concurrent appends instead of
-    aborting on them.
-    """
-    recovered = _recover_swap(fs, jvm, dpath)
-    if recovered:
-        raise RuntimeError(
-            f"{dpath} held an interrupted compaction swap ({recovered}); "
-            "the directory is consistent again — rerun compaction"
-        )
-
-    def _listing():
-        out = {}
-        for f in fs.listStatus(_jpath(jvm, dpath)):
-            name = f.getPath().getName()
-            if not f.isDirectory() and name.endswith(".parquet"):
-                out[name] = (f.getLen(), f.getModificationTime())
-        return out
-
-    before = _listing()
-    if not before:
-        return {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
-    total_bytes = sum(sz for sz, _ in before.values())
-    n_out = max(1, -(-int(total_bytes) // (target_file_mb * 1024 * 1024)))
-
-    df = spark.read.parquet(dpath)
-    rows = df.count()
-    out = df.repartition(n_out)
-    if sort_within:
-        out = out.sortWithinPartitions(*sort_within)
-    tmp = dpath.rstrip("/") + ".compact-tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    # verify the rewrite BEFORE the swap — a failed job must never eat data
-    rows_after = spark.read.parquet(tmp).count()
-    if rows_after != rows:
-        raise RuntimeError(
-            f"compaction row mismatch ({rows} -> {rows_after}); "
-            f"original left untouched, rewrite kept at {tmp}"
-        )
-    new_names = [
-        f.getPath().getName()
-        for f in fs.listStatus(_jpath(jvm, tmp))
-        if f.getPath().getName().endswith(".parquet")
-    ]
-    # Spark part-file names embed a fresh job UUID, so collisions with the
-    # live dir can't happen in practice — but the swap's correctness
-    # depends on it, so check rather than assume
-    clash = set(new_names) & set(before)
-    if clash:
-        fs.delete(_jpath(jvm, tmp), True)
-        raise RuntimeError(f"compacted file names collide with live dir: {clash}")
-    if _pre_fence_hook is not None:  # test seam: the TOCTOU instant
-        _pre_fence_hook(dpath)
-    # concurrent-writer fence: if ANY file appeared/changed since the
-    # snapshot we compacted, the swap would eat the new data — abort with
-    # the original intact.  The manifest shrinks the remaining TOCTOU
-    # window to the per-file moves below (a crash there is recoverable,
-    # a concurrent append there can still be superseded — run compaction
-    # in the maintenance window that owns the table, as table-format
-    # OPTIMIZE does via its transaction log).
-    if _listing() != before:
-        fs.delete(_jpath(jvm, tmp), True)
-        raise RuntimeError(
-            f"{dpath} changed during compaction (concurrent writer?); "
-            "original left untouched — rerun inside a maintenance window"
-        )
-    # phase 1: commit record, then move the compacted files in
-    _write_manifest(
-        fs, jvm, dpath, {"add": new_names, "remove": sorted(before)}
-    )
-    for name in new_names:
-        if not fs.rename(_jpath(jvm, tmp, name), _jpath(jvm, dpath, name)):
-            raise RuntimeError(
-                f"move {name} into {dpath} failed mid-swap; run "
-                "compaction recovery (re-invoking compact_parquet rolls "
-                "the manifest back)"
-            )
-    # phase 2: retire the superseded files, then the commit record
-    for name in before:
-        fs.delete(_jpath(jvm, dpath, name), False)
-    fs.delete(_jpath(jvm, dpath, MANIFEST_NAME), False)
-    fs.delete(_jpath(jvm, tmp), True)
-    return {
-        "files_before": len(before),
-        "files_after": len(_listing()),
-        "bytes": int(total_bytes),
-        "rows": rows,
-    }
-
-
-def _partition_leaves(fs, jvm, dpath: str) -> list[str] | None:
-    """None for a flat dir; else the hive-partition LEAF directories
-    (recursing through multi-level ``col=value`` nesting)."""
-    subs = [
-        f.getPath()
-        for f in fs.listStatus(_jpath(jvm, dpath))
-        if f.isDirectory()
-        and not f.getPath().getName().startswith((".", "_"))
-        and not f.getPath().getName().endswith(".compact-tmp")
-    ]
-    if not subs:
-        return None
-    bad = [p.getName() for p in subs if "=" not in p.getName()]
-    if bad:
-        raise ValueError(
-            f"{dpath} contains non-hive subdirectory {bad[0]!r} — "
-            "not a parquet table layout compact_parquet understands"
-        )
-    leaves: list[str] = []
-    for p in subs:
-        nested = _partition_leaves(fs, jvm, p.toString())
-        leaves.extend(nested if nested is not None else [p.toString()])
-    return leaves
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    sort_within: list[str] | None = None,
-) -> dict:
-    """Small-file compaction for an append-heavy parquet table: rewrite
-    ``path`` into ~``target_file_mb`` files, preserving rows exactly →
-    stats dict (files before/after, bytes, rows, partitions).
-
-    The lake's incremental paths (xdd day drops, stream sinks, KB update
-    batches) append small files per run; scan parallelism then tracks file
-    COUNT instead of data size and footer-read overhead dominates.
-    Compaction is the standard maintenance job (what OPTIMIZE does in
-    table formats).
-
-    Hive-partitioned tables are compacted PER LEAF PARTITION: each
-    ``col=value`` leaf is rewritten in place, so the directory shape —
-    and with it partition pruning (``PartitionFilters`` in every reader's
-    scan) — is preserved by construction, partitions stay independently
-    recoverable units, and the job parallelizes over partitions on a
-    cluster.  Each leaf swap is the manifest-based two-phase commit of
-    :func:`_compact_leaf`: the live dir always holds a complete copy of
-    the data, and an interrupted swap is rolled forward/back from its
-    manifest on the next invocation.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-
-    leaves = _partition_leaves(fs, jvm, path)
-    if leaves is None:
-        stats = _compact_leaf(spark, fs, jvm, path, target_file_mb, sort_within)
-        stats["partitions"] = 0
-        return stats
-    agg = {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0,
-           "partitions": len(leaves)}
-    for leaf in sorted(leaves):
-        s = _compact_leaf(spark, fs, jvm, leaf, target_file_mb, sort_within)
-        for k in ("files_before", "files_after", "bytes", "rows"):
-            agg[k] += s[k]
-    return agg

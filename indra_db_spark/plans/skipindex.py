@@ -6,11 +6,13 @@ access (``indra_db/schemas/readonly_schema.py`` index DDL); a parquet lake
 has no btree, so selective access at 100 TB comes from LAYOUT: co-locate
 rows so that any selective predicate touches few files, record per-file
 column ranges in a manifest, and prune the file list BEFORE the scan ever
-starts.  Directory partitioning covers one coarse dimension; bucketing
-covers equi-join keys (plans/lake.py:write_bucketed); this module covers
-the remaining case — range predicates over SEVERAL columns at once — with
-the interleaved-bit (Morton/z-order) clustering that Delta OPTIMIZE ZORDER
-and Iceberg's sort orders use.
+starts.  Directory partitioning covers one coarse dimension; this module
+covers range predicates over SEVERAL columns at once with the
+interleaved-bit (Morton/z-order) clustering that Delta OPTIMIZE ZORDER and
+Iceberg's sort orders use.  It also defines the bloom hash scheme every
+equality probe shares (``BLOOM_SCHEME``, ``_bloom_pos_sql`` and its
+Python twin ``bloom_positions``): the txlog manifests' bloom words and
+this index's are built and probed through it.
 
 Why it works: sorting by the z-value keeps rows close in EVERY interleaved
 dimension at once, so each output file covers a small axis-aligned box of
@@ -238,12 +240,6 @@ def build_file_index(
     built under different budgets (an :func:`extend_file_index` union, a
     re-configured table) compose without any caller threading m/k.
     """
-    from indra_db_spark.operators.sampling import (
-        BLOOM_K,
-        BLOOM_M,
-        _bloom_pos_sql,
-    )
-
     # bloom budget defaults to the module constants; index_tx_table's
     # rescan fallback passes the TABLE's recorded m/k instead, so a
     # caller probing with tx.bloom_spec() is right on EVERY path
@@ -401,8 +397,6 @@ def index_tx_table(
         if spec is None:
             covered = False
         else:
-            from indra_db_spark.operators.sampling import BLOOM_SCHEME
-
             # the scheme tag must match the hash THIS reader probes
             # with (skip_scan → _py_bloom_hit): untagged entries
             # (pre-r14 manifests; the hash changed md5→xxhash64 in
@@ -529,10 +523,137 @@ def index_tx_table(
     )
 
 
+# ---- the bloom hash scheme: the SQL builder every stats job runs and its
+# pure-Python twin every driver-side probe runs, defined in this one module
+
+#: Default bloom geometry (the skip index's blooms and
+#: :func:`operators.sampling.decontaminate_bloom`) — 2^18 bits / 3 hashes
+#: holds ~10^4-10^5 members at ≲2% false-positive rate; size m
+#: ≈ 10·|members| (rounded to a power of two) when tuning.  False
+#: positives only cost verification work, never results.
+BLOOM_M = 1 << 18
+BLOOM_K = 3
+
+#: Version tag of the bloom position-hash scheme implemented by
+#: :func:`_bloom_pos_sql` / :func:`bloom_positions`.
+#: PERSISTED bloom word maps (txlog manifest stats entries) carry this
+#: tag so a reader only ever probes words hashed under ITS OWN scheme:
+#: round 13 switched the hash from md5+conv chains to xxhash64, and an
+#: untagged lake written by older code probed with the new scheme would
+#: "prove" absence of present keys and silently mis-prune (r13 verdict,
+#: "what's wrong" #1).  Untagged or foreign-tagged entries are never
+#: probed — the reader admits the file/segment unpruned, which is
+#: always sound (the exact residual filter still applies).
+BLOOM_SCHEME = "xxh64"
+
+
+def _bloom_pos_sql(i: int, m: int, shingle_sql: str = "shingle") -> str:
+    """Deterministic hash position #i in [0, m): ``pmod(xxhash64(value,
+    i), m)`` — the position index rides as a SECOND hash argument, so
+    every position shares one string hash instead of paying k separate
+    digest chains (the md5+conv form this replaced measured 3.5× slower
+    per stats job and allocated a hex-string temporary per position).
+    The explicit NULL guard keeps the md5-era semantics: Spark's hash
+    functions SKIP null children (``xxhash64(NULL, i)`` is a real hash),
+    but a NULL value must contribute NO positions so all-NULL files
+    still carry an empty word map that proves total absence.  The
+    Python twin is :func:`bloom_positions` (via
+    :func:`_xxh64_utf8` / :func:`_xxh64_int` below) — bit-for-bit,
+    pinned by ``test_bloom_positions_sql_python_parity``."""
+    return (
+        f"if(({shingle_sql}) IS NULL, CAST(NULL AS BIGINT),"
+        f" pmod(xxhash64({shingle_sql}, {i}), {m}))"
+    )
+
+
+# ---- pure-Python XXH64 (the xxHash spec, as Spark's XxHash64 expression
+# implements it) — the driver-side twin of _bloom_pos_sql.  Kept beside
+# the SQL builder so the bloom hash scheme is defined in ONE module; the
+# only consumer is bloom_positions (and its probes).
+
+_XXH_P1 = 0x9E3779B185EBCA87
+_XXH_P2 = 0xC2B2AE3D27D4EB4F
+_XXH_P3 = 0x165667B19E3779F9
+_XXH_P4 = 0x85EBCA77C2B2AE63
+_XXH_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+#: seed of Spark's ``xxhash64(...)`` SQL function
+XXH64_SPARK_SEED = 42
+
+
+def _xxh_rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_fmix(h: int) -> int:
+    h ^= h >> 33
+    h = (h * _XXH_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XXH_P3) & _M64
+    h ^= h >> 32
+    return h
+
+
+def _xxh_merge(h: int, v: int) -> int:
+    v = (_xxh_rotl((v * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+    h ^= v
+    return (h * _XXH_P1 + _XXH_P4) & _M64
+
+
+def _xxh64_int(i: int, seed: int) -> int:
+    """XXH64 of one 32-bit int under ``seed`` — how Spark hashes the
+    IntegerType position-index argument (seed = the string's hash)."""
+    h = (seed + _XXH_P5 + 4) & _M64
+    h ^= ((i & 0xFFFFFFFF) * _XXH_P1) & _M64
+    h = (_xxh_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+    return _xxh_fmix(h)
+
+
+def _xxh64_utf8(b: bytes, seed: int = XXH64_SPARK_SEED) -> int:
+    """XXH64 of a byte string (unsigned 64-bit result) — how Spark
+    hashes a StringType argument (UTF-8 bytes, little-endian words)."""
+    n = len(b)
+    off = 0
+    if n >= 32:
+        v1 = (seed + _XXH_P1 + _XXH_P2) & _M64
+        v2 = (seed + _XXH_P2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _XXH_P1) & _M64
+        while off <= n - 32:
+            v1 = (_xxh_rotl((v1 + int.from_bytes(b[off:off + 8], "little") * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+            v2 = (_xxh_rotl((v2 + int.from_bytes(b[off + 8:off + 16], "little") * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+            v3 = (_xxh_rotl((v3 + int.from_bytes(b[off + 16:off + 24], "little") * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+            v4 = (_xxh_rotl((v4 + int.from_bytes(b[off + 24:off + 32], "little") * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+            off += 32
+        h = (_xxh_rotl(v1, 1) + _xxh_rotl(v2, 7) + _xxh_rotl(v3, 12) + _xxh_rotl(v4, 18)) & _M64
+        h = _xxh_merge(h, v1)
+        h = _xxh_merge(h, v2)
+        h = _xxh_merge(h, v3)
+        h = _xxh_merge(h, v4)
+    else:
+        h = (seed + _XXH_P5) & _M64
+    h = (h + n) & _M64
+    while off <= n - 8:
+        k1 = int.from_bytes(b[off:off + 8], "little")
+        h ^= (_xxh_rotl((k1 * _XXH_P2) & _M64, 31) * _XXH_P1) & _M64
+        h = (_xxh_rotl(h, 27) * _XXH_P1 + _XXH_P4) & _M64
+        off += 8
+    if off <= n - 4:
+        h ^= (int.from_bytes(b[off:off + 4], "little") * _XXH_P1) & _M64
+        h = (_xxh_rotl(h, 23) * _XXH_P2 + _XXH_P3) & _M64
+        off += 4
+    while off < n:
+        h ^= (b[off] * _XXH_P5) & _M64
+        h = (_xxh_rotl(h, 11) * _XXH_P1) & _M64
+        off += 1
+    return _xxh_fmix(h)
+
+
 def bloom_positions(value, m: int, k: int) -> list[tuple[int, int]]:
     """The (word index, bit mask) positions of ``value`` in an m-bit
     k-hash bloom — THE single Python-side implementation of
-    :func:`operators.sampling._bloom_pos_sql`'s hash mapping
+    :func:`_bloom_pos_sql`'s hash mapping
     (``pmod(xxhash64(CAST(value AS STRING), i), m)``: ONE xxhash64 over
     the value string, shared across all k positions, then the position
     index folded in as Spark folds a second IntegerType hash argument).
@@ -540,8 +661,6 @@ def bloom_positions(value, m: int, k: int) -> list[tuple[int, int]]:
     ``TxTable.skip_read``'s memoized probe) builds on this one function
     so the bit math cannot silently fork; SQL↔Python bit-parity is
     pinned by ``test_bloom_positions_sql_python_parity``."""
-    from indra_db_spark.operators.sampling import _xxh64_int, _xxh64_utf8
-
     hs = _xxh64_utf8(str(value).encode("utf-8"))
     out = []
     for i in range(k):
@@ -594,10 +713,8 @@ def skip_scan(
     does), so mixed-budget unions probe correctly with no caller
     configuration; the ``bloom_m``/``bloom_k`` parameters only cover
     legacy frames without those columns (defaulting to the scan
-    constants :data:`operators.sampling.BLOOM_M`/``BLOOM_K``).
+    constants :data:`BLOOM_M`/``BLOOM_K``).
     """
-    from indra_db_spark.operators.sampling import BLOOM_K, BLOOM_M
-
     bloom_m = BLOOM_M if bloom_m is None else bloom_m
     bloom_k = BLOOM_K if bloom_k is None else bloom_k
     predicates = predicates or {}

@@ -1,11 +1,9 @@
-"""Versioned transaction log for multi-writer parquet tables.
-
-:mod:`plans.lake`'s compaction manifest is explicitly a SINGLE-writer
-commit record (lake.py:306-318): a concurrent append during the swap is
-detected and aborted, never merged.  This module supplies the missing
-multi-writer story as a minimal snapshot-style transaction log — the same
-protocol shape the public table formats use (Delta's `_delta_log` JSON
-commits, Iceberg's snapshot manifests), reduced to what this lake needs:
+"""Versioned transaction log for multi-writer parquet tables — the one
+storage layout every readonly lake table is written, released and opened
+through (:mod:`plans.lake`, :mod:`assembly.snapshot`).  A minimal
+snapshot-style transaction log — the same protocol shape the public table
+formats use (Delta's `_delta_log` JSON commits, Iceberg's snapshot
+manifests), reduced to what this lake needs:
 
 - ``_txlog/v{N:012d}.json`` resolves the COMPLETE live file list of
   version N (snapshot manifests, not action deltas — every version
@@ -538,6 +536,39 @@ def _jpath(jvm, *parts):
     return p
 
 
+def default_log_store(fs, jvm, root: str) -> LogStore:
+    """The claim primitive for the log at ``root/_txlog`` on the resolved
+    filesystem ``fs``: :class:`LocalFsLogStore` for a local filesystem,
+    :class:`HadoopLogStore` for every other.
+
+    Decided on the RESOLVED filesystem, not the path string: a
+    scheme-less root resolves through fs.defaultFS, and a string-based
+    check would bolt a local-disk log store onto an HDFS-resident log
+    (split-brain commits).  For a truly local FS, Hadoop's rename/create
+    primitives are check-then-act, so claims go through the atomic-link
+    store."""
+    if str(fs.getUri().getScheme() or "file") == "file":
+        local_root = root
+        if local_root.startswith("file:"):
+            local_root = "/" + local_root[5:].lstrip("/")
+        return LocalFsLogStore(os.path.join(local_root, LOG_DIR))
+    return HadoopLogStore(fs, jvm, root)
+
+
+def log_versions(fs, jvm, root: str) -> list[int]:
+    """Sorted numbers N of the ``v{N:012d}.json`` entries claimed in the
+    log at ``root/_txlog`` (which must exist)."""
+    out = []
+    for f in fs.listStatus(_jpath(jvm, root, LOG_DIR)):
+        name = f.getPath().getName()
+        if name.startswith("v") and name.endswith(".json"):
+            try:
+                out.append(int(name[1:-5]))
+            except ValueError:
+                pass
+    return sorted(out)
+
+
 class TxTable:
     """One transaction-logged parquet table rooted at ``root``.
 
@@ -556,23 +587,11 @@ class TxTable:
         self._fs = _jpath(self._jvm, self.root).getFileSystem(conf)
         self._fs.mkdirs(_jpath(self._jvm, self.root, LOG_DIR))
         self._fs.mkdirs(_jpath(self._jvm, self.root, DATA_DIR))
-        if log_store is not None:
-            self._log_store = log_store
-        elif str(self._fs.getUri().getScheme() or "file") == "file":
-            # decide on the RESOLVED filesystem, not the path string: a
-            # scheme-less root resolves through fs.defaultFS, and a
-            # string-based check would bolt a local-disk log store onto
-            # an HDFS-resident table (split-brain commits).  For a truly
-            # local FS, Hadoop's rename/create primitives are
-            # check-then-act, so claim through the atomic-link store.
-            local_root = self.root
-            if local_root.startswith("file:"):
-                local_root = "/" + local_root[5:].lstrip("/")
-            self._log_store = LocalFsLogStore(
-                os.path.join(local_root, LOG_DIR)
-            )
-        else:
-            self._log_store = HadoopLogStore(self._fs, self._jvm, self.root)
+        self._log_store = (
+            log_store
+            if log_store is not None
+            else default_log_store(self._fs, self._jvm, self.root)
+        )
         # segment membership cache: segments are IMMUTABLE (uuid-named,
         # written once, never rewritten), so a name fully determines its
         # contents — cache hits make changes()/vacuum() manifest walks and
@@ -616,21 +635,8 @@ class TxTable:
 
     # ---- log primitives -------------------------------------------------
 
-    def _version_of(self, name: str) -> int | None:
-        if not (name.startswith("v") and name.endswith(".json")):
-            return None
-        try:
-            return int(name[1:-5])
-        except ValueError:
-            return None
-
     def _versions(self) -> list[int]:
-        out = []
-        for f in self._fs.listStatus(_jpath(self._jvm, self.root, LOG_DIR)):
-            v = self._version_of(f.getPath().getName())
-            if v is not None:
-                out.append(v)
-        return sorted(out)
+        return log_versions(self._fs, self._jvm, self.root)
 
     def _read_log_json(self, name: str) -> dict | list:
         p = _jpath(self._jvm, self.root, LOG_DIR, name)
@@ -1249,7 +1255,7 @@ class TxTable:
         Bloom entries are self-describing ``[m, k, {word: mask}]`` (the
         config could change over the table's life; a probe must use the
         m/k the words were hashed under) and use the same xxhash64
-        mapping as :func:`operators.sampling._bloom_pos_sql`, so
+        mapping as :func:`plans.skipindex._bloom_pos_sql`, so
         driver-side probes
         (:meth:`skip_read`, :func:`plans.skipindex._py_bloom_hit`) line
         up bit-for-bit with SQL-built filters.  Size per file per column
@@ -1284,7 +1290,7 @@ class TxTable:
                     for c in cols
                 }
         if bloom_cols:
-            from indra_db_spark.operators.sampling import (
+            from indra_db_spark.plans.skipindex import (
                 BLOOM_SCHEME,
                 _bloom_pos_sql,
             )
@@ -2226,8 +2232,10 @@ class TxTable:
                     return False
             return True
 
-        from indra_db_spark.operators.sampling import BLOOM_SCHEME
-        from indra_db_spark.plans.skipindex import bloom_positions
+        from indra_db_spark.plans.skipindex import (
+            BLOOM_SCHEME,
+            bloom_positions,
+        )
 
         # bloom probe positions depend only on (value, m, k) — NEVER the
         # file or segment — so they are memoized across both pruning

@@ -1,5 +1,6 @@
-"""Storage round trip: write the lake with the at-scale layout, read it
-back, and get identical query results; plus the mesh_ref_counts client."""
+"""Storage round trip: commit the lake through the transaction log, open
+it back, and get identical query results; releases, the txlog serving
+path, and the mesh_ref_counts client."""
 
 from __future__ import annotations
 
@@ -15,24 +16,16 @@ from indra_db_spark.plans.shaping import get_hashes, get_mesh_ref_counts
 def lakes(spark, tmp_path_factory):
     mem_lake, stmts, _ = fixture_lake(spark)
     root = str(tmp_path_factory.mktemp("lake"))
-    mem_lake.write_optimized(root, partitions=4)
-    return mem_lake, ReadonlyLake.from_parquet(spark, root), stmts
+    mem_lake.write_txlog(spark, root, stats=True)
+    return mem_lake, ReadonlyLake.from_txlog(spark, root), stmts
 
 
 def test_parquet_lake_query_parity(lakes):
-    mem_lake, pq_lake, _ = lakes
+    mem_lake, tx_lake, _ = lakes
     q = HasAgent("MEK", role="SUBJECT") & HasType(["Phosphorylation"])
     want = {r.mk_hash for r in get_hashes(q, mem_lake).collect()}
-    got = {r.mk_hash for r in get_hashes(q, pq_lake).collect()}
+    got = {r.mk_hash for r in get_hashes(q, tx_lake).collect()}
     assert got == want and got
-
-
-def test_ranked_layout_sorted_within_files(lakes):
-    _, pq_lake, _ = lakes
-    rows = pq_lake["source_meta"].collect()  # per-partition order preserved
-    # files were written sorted by ev_count desc — spot-check monotonicity
-    # inside each input file via the first partition's slice
-    assert len(rows) > 0
 
 
 def test_mesh_ref_counts_client(lakes):
@@ -85,6 +78,11 @@ def test_sql_surface_matches_algebra(lakes):
 
 
 def test_release_manifest_round_trip(lakes, tmp_path):
+    """A release round-trips through its record, and editing a recorded
+    row count makes a strict load refuse it as drift."""
+    import json
+    import os
+
     from indra_db_spark.assembly.snapshot import load_release, write_release
 
     mem_lake, _, _ = lakes
@@ -92,6 +90,8 @@ def test_release_manifest_round_trip(lakes, tmp_path):
     manifest = write_release(mem_lake, root, meta={"build": "test"})
     assert manifest["meta"] == {"build": "test"}
     assert manifest["tables"]["source_meta"]["rows"] > 0
+    assert set(manifest["versions"]) == set(mem_lake.tables())
+    assert set(manifest["tables"]) == set(manifest["versions"])
 
     lake2, problems = load_release(mem_lake.spark, root)
     assert problems == []
@@ -100,149 +100,100 @@ def test_release_manifest_round_trip(lakes, tmp_path):
     got = {r.mk_hash for r in get_hashes(q, lake2).collect()}
     assert got == want and got
 
-    # tamper with the manifest -> strict load refuses.  The crc sidecar is
-    # removed so the edit is checksum-consistent: a raw edit alone trips
-    # Hadoop's ChecksumException before the drift check even runs (also a
-    # guarantee, but not the one under test here).
-    import json, os
-
-    mpath = os.path.join(root, "manifest.json")
-    with open(mpath) as f:
+    # tamper with the record -> strict load refuses
+    rpath = os.path.join(root, "_txlog", "v000000000001.json")
+    with open(rpath) as f:
         m = json.load(f)
     m["tables"]["source_meta"]["rows"] += 1
-    with open(mpath, "w") as f:
+    with open(rpath, "w") as f:
         json.dump(m, f)
-    crc = os.path.join(root, ".manifest.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
     with pytest.raises(ValueError, match="drift"):
         load_release(mem_lake.spark, root)
+    _, problems = load_release(mem_lake.spark, root, strict=False)
+    assert problems and "source_meta" in problems[0]
 
 
-def test_algebra_served_from_bucketed_lake(spark):
-    """The query algebra runs FROM the bucketed catalog tables
-    (ReadonlyLake.from_bucketed) with results identical to the in-memory
-    lake, and its mk_hash joins plan with FEWER exchanges than the same
-    algebra over plain parquet — the co-location is load-bearing for the
-    actual query surface (§2.2-§2.6), not just a standalone join demo."""
-    from indra_db_spark.plans.fixtures import fixture_lake
-    from indra_db_spark.plans.queries import (
-        HasAgent,
-        HasEvidenceBound,
-        HasType,
+def test_load_release_serves_only_whole_releases(spark, tmp_path):
+    """Tables committed after the newest release record (a release still
+    being written) are not served: a load mid-release returns the
+    previous release's results for a query joining two evolved tables,
+    and the next record switches every table at once."""
+    from pyspark.sql import functions as F
+
+    from indra_db_spark.assembly.snapshot import (
+        commit_release,
+        load_release,
+        write_release,
+    )
+    from indra_db_spark.plans.txlog import TxTable
+
+    mem_lake, _, _ = fixture_lake(spark)
+    root = str(tmp_path / "release")
+    rec1 = write_release(mem_lake, root)
+    q = HasAgent("MEK", role="SUBJECT") & HasType(["Phosphorylation"])
+    want1 = {r.mk_hash for r in get_hashes(q, mem_lake).collect()}
+
+    # release 2 half-landed: two tables appended, no record yet
+    shift = F.col("mk_hash") + F.lit(1 << 44)
+    versions2 = dict(rec1["versions"])
+    for tbl in ("name_meta", "source_meta"):
+        versions2[tbl] = TxTable(spark, f"{root}/{tbl}").append(
+            mem_lake[tbl].withColumn("mk_hash", shift)
+        )
+    mid, problems = load_release(spark, root)
+    assert problems == []
+    assert {r.mk_hash for r in get_hashes(q, mid).collect()} == want1
+
+    commit_release(spark, root, versions2)
+    new, problems = load_release(spark, root)
+    assert problems == []
+    assert {r.mk_hash for r in get_hashes(q, new).collect()} == want1 | {
+        h + (1 << 44) for h in want1
+    }
+    # a server opened mid-release keeps serving the release it opened
+    assert {r.mk_hash for r in get_hashes(q, mid).collect()} == want1
+
+
+def test_write_release_refuses_a_held_root(spark, tmp_path):
+    """Writing a lake again to a root that already holds a release would
+    append every table a second time; it is refused, and release 1 still
+    loads with its own row counts.  A record naming a table the log
+    cannot serve is refused too, instead of dropping the table."""
+    from indra_db_spark.assembly.snapshot import (
+        commit_release,
+        load_release,
+        write_release,
     )
 
     mem_lake, _, _ = fixture_lake(spark)
-    mem_lake.write_bucketed(spark, database="bkalg", buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        bk_lake = ReadonlyLake.from_bucketed(spark, "bkalg")
-        queries = {
-            "agent_and_type": HasAgent("MEK", role="SUBJECT")
-            & HasType(["Phosphorylation"]),
-            "union": HasAgent("ERK") | HasAgent("RAF"),
-            "minus": HasType(["Phosphorylation", "Activation"])
-            & ~HasAgent("RAF"),
-            "intrusive": HasAgent("MEK") & HasEvidenceBound([">= 1"]),
-        }
-        for name, q in queries.items():
-            want = {r.mk_hash for r in get_hashes(q, mem_lake).collect()}
-            got_df = get_hashes(q, bk_lake)
-            got = {r.mk_hash for r in got_df.collect()}
-            assert got == want and got, name
-        # exchange economics on the join-heavy conjunction: bucketed scan
-        # sides arrive pre-partitioned on mk_hash
-        q = queries["agent_and_type"]
-        n_bk = get_hashes(q, bk_lake)._jdf.queryExecution().executedPlan().toString().count("Exchange")
-        n_mem = get_hashes(q, mem_lake)._jdf.queryExecution().executedPlan().toString().count("Exchange")
-        assert n_bk < n_mem, (n_bk, n_mem)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP DATABASE IF EXISTS bkalg CASCADE")
+    root = str(tmp_path / "release")
+    rec1 = write_release(mem_lake, root)
+    with pytest.raises(ValueError, match="already holds a release"):
+        write_release(mem_lake, root)
+    lake, problems = load_release(spark, root)
+    assert problems == []
+    assert lake["source_meta"].count() == rec1["tables"]["source_meta"]["rows"]
 
-
-def test_bucketed_lake_joins_without_exchange(spark):
-    """write_bucketed records the mk_hash partitioning in the catalog, so
-    a join between two lake tables plans with ZERO Exchange (the
-    co-location claim of SCALING.md §1, asserted not narrated) — while
-    the plain-parquet read of the same data must shuffle both sides."""
-    from indra_db_spark.plans.fixtures import fixture_lake
-
-    lake, _, _ = fixture_lake(spark)
-    written = lake.write_bucketed(spark, database="bktest", buckets=8)
-    assert any(t.endswith("name_meta") for t in written)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # disable broadcast so the planner must pick the co-located
-        # sort-merge path (at real scale these sides exceed any
-        # broadcast threshold anyway)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.table("bktest.name_meta")
-        b = spark.table("bktest.other_meta")
-        joined = a.join(b, "mk_hash")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # and the data is intact
-        assert joined.count() > 0
-        assert a.count() == lake["name_meta"].count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP DATABASE IF EXISTS bktest CASCADE")
-
-
-def test_analytics_from_bucketed_events(spark, sf_dir):
-    """The analytics family served FROM the user-bucketed (user, ts)-sorted
-    events layout: identical results to the plain read, with the events-
-    side Exchange gone (funnel's per-user aggregate, paths' per-user
-    window) and the window Sort elided — the write-once sort replaces the
-    per-query shuffle+sort, the same trade the mk_hash lake makes."""
-    from indra_db_spark.operators.analytics import event_paths, funnel
-    from indra_db_spark.sources.bucketed import write_events_bucketed
-    from indra_db_spark.sources.lake import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    write_events_bucketed(ev, "bkev.events", buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prev_ord = spark.conf.get(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    with pytest.raises(ValueError, match="cannot serve .*not_a_table"):
+        commit_release(spark, root, {**rec1["versions"], "not_a_table": 1})
+    assert load_release(spark, root)[0]["source_meta"].count() == (
+        rec1["tables"]["source_meta"]["rows"]
     )
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-        )
-        bk = spark.table("bkev.events")
-        ops = {
-            "funnel": lambda e: funnel(e, ["signup", "click", "purchase"]),
-            "paths": lambda e: event_paths(e, n=3, k=50),
-        }
-        def final_plan(df):
-            # an EXECUTED AdaptiveSparkPlan prints Final + Initial
-            # sections; count nodes in the final one only
-            return (
-                df._jdf.queryExecution().executedPlan().toString()
-                .split("== Initial Plan ==")[0]
-            )
 
-        for name, op in ops.items():
-            want = {tuple(r) for r in op(ev).collect()}
-            got_df = op(bk)
-            got = {tuple(r) for r in got_df.collect()}
-            assert got == want and got, name
-            p_bk, p_pl = final_plan(got_df), final_plan(op(ev))
-            assert p_bk.count("Exchange") < p_pl.count("Exchange"), name
-        # the per-user window runs straight off the one-file-per-bucket
-        # sorted scan: no Sort node anywhere (funnel keeps struct-compare
-        # sorts inside its aggregates, so the zero-sort pin is on paths)
-        assert final_plan(op(bk)).count("Sort [") == 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.set(
-            "spark.sql.legacy.bucketedTableScan.outputOrdering", prev_ord
-        )
-        spark.sql("DROP DATABASE IF EXISTS bkev CASCADE")
+
+def test_load_release_without_record_names_the_root(spark, tmp_path):
+    """A root with no release record (empty, missing, or holding tables
+    whose record never committed) is refused with a ValueError naming
+    the root, not a filesystem exception."""
+    from indra_db_spark.assembly.snapshot import load_release
+
+    mem_lake, _, _ = fixture_lake(spark)
+    root = str(tmp_path / "unreleased")
+    with pytest.raises(ValueError, match="no release record under .*unreleased"):
+        load_release(spark, root)
+    mem_lake.write_txlog(spark, root, stats=True)
+    with pytest.raises(ValueError, match="no release record under .*unreleased"):
+        load_release(spark, root)
 
 
 def test_algebra_served_from_txlog_snapshot(spark, tmp_path):
@@ -330,73 +281,23 @@ def test_txlog_algebra_skip_scan_prunes_files(spark, tmp_path):
     assert files_total == 8 and files_read < files_total
 
 
-def test_open_layout_chooser(spark, tmp_path, monkeypatch):
-    """ReadonlyLake.open picks the measured-fastest layout per tier
-    (SCALING.md §1b decision table): plain parquet below the bucketed
-    byte threshold, the bucketed catalog above it, the txlog whenever a
-    table has a log or the caller pins a version."""
-    mem_lake, _, _ = fixture_lake(spark)
-    root = str(tmp_path / "plain")
-    mem_lake.write_parquet(root)
-    mem_lake.write_bucketed(spark, database="chooser_db", buckets=4)
-    tx_root = str(tmp_path / "tx")
-    try:
-        # fixture tables are KB-scale: far below the threshold -> plain
-        lake = ReadonlyLake.open(spark, root=root, database="chooser_db")
-        files = lake["name_meta"].inputFiles()
-        assert files and all(root in f for f in files)
-        # force the crossover: every table now clears the byte gate ->
-        # the bucketed catalog serves it
-        monkeypatch.setattr(ReadonlyLake, "BUCKETED_MIN_BYTES", 0)
-        lake = ReadonlyLake.open(spark, root=root, database="chooser_db")
-        files = lake["name_meta"].inputFiles()
-        assert files and not any(root in f for f in files)
-        # a txlog table trumps both (snapshot isolation is correctness)
-        from indra_db_spark.plans.txlog import TxTable
-
-        TxTable(spark, f"{tx_root}/name_meta").append(mem_lake["name_meta"])
-        lake = ReadonlyLake.open(
-            spark, root=root, database="chooser_db", tx_root=tx_root
-        )
-        assert any("/tx/name_meta/data/" in f
-                   for f in lake["name_meta"].inputFiles())
-        # version pin -> everything through the log
-        pinned = ReadonlyLake.open(spark, tx_root=tx_root, version=1,
-                                   extra={
-                                       n: mem_lake[n]
-                                       for n in mem_lake.tables()
-                                       if n != "name_meta"
-                                   })
-        assert pinned["name_meta"].count() == mem_lake["name_meta"].count()
-        # results identical across every tier
-        q = HasAgent("MEK") & HasType(["Phosphorylation"])
-        want = {r.mk_hash for r in get_hashes(q, mem_lake).collect()}
-        assert {r.mk_hash for r in get_hashes(q, lake).collect()} == want
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS chooser_db CASCADE")
-
-
 def test_fsutil_hadoop_branch_matches_local(spark, tmp_path, monkeypatch):
     """The scheme-aware helpers give identical answers through both
     branches — os.* for local roots, the Hadoop FileSystem for scheme'd
-    roots (r8 verdict #1: the chooser must open s3a/hdfs roots; forcing
-    the remote branch over file: URIs executes the exact same
-    Path.getFileSystem / listFiles / getContentSummary code path the
-    cluster schemes resolve through)."""
+    roots (r8 verdict #1: the lake open must reach s3a/hdfs roots;
+    forcing the remote branch over file: URIs executes the exact same
+    Path.getFileSystem code path the cluster schemes resolve
+    through)."""
     from indra_db_spark.plans import fsutil
 
     d = tmp_path / "tbl"
     spark.range(100).write.parquet(str(d))
-    (d / "_SUCCESS_extra").write_text("x" * 999)  # hidden: both must skip
     uri = "file:" + str(tmp_path)
-    local_bytes = fsutil.dir_bytes(spark, str(d))
-    assert local_bytes > 0
+    assert fsutil.is_dir(spark, str(d))
+    assert not fsutil.is_dir(spark, str(tmp_path / "nope"))
     monkeypatch.setattr(fsutil, "_is_local", lambda spark, path: False)
-    assert fsutil.exists(spark, fsutil.join(uri, "tbl"))
     assert fsutil.is_dir(spark, fsutil.join(uri, "tbl"))
-    assert not fsutil.exists(spark, fsutil.join(uri, "nope"))
-    assert fsutil.dir_bytes(spark, fsutil.join(uri, "tbl")) == local_bytes
-    assert fsutil.dir_bytes(spark, fsutil.join(uri, "nope")) == 0
+    assert not fsutil.is_dir(spark, fsutil.join(uri, "nope"))
     fsutil.mkdirs(spark, fsutil.join(uri, "made"))
     fsutil.delete(spark, fsutil.join(uri, "tbl"))
     monkeypatch.undo()
@@ -427,36 +328,27 @@ def test_fsutil_scheme_parsing(spark):
 
 
 def test_open_layout_chooser_nonlocal_root(spark, tmp_path, monkeypatch):
-    """The layout chooser (the ONE serving entry point) opens a
-    NON-local-branch root end to end: with the local fast path disabled,
-    every exists/is_dir/dir_bytes decision routes through the Hadoop
-    FileSystem — plain-parquet discovery, the txlog trump, and
-    from_txlog all still work on a scheme'd root (r8 verdict #1)."""
+    """The serving entry point (from_txlog) opens a NON-local-branch
+    root end to end: with the local fast path disabled, every is_dir
+    decision routes through the Hadoop FileSystem, and a scheme'd root
+    still serves its txlog table (r8 verdict #1)."""
     from indra_db_spark.plans import fsutil
     from indra_db_spark.plans.txlog import TxTable
 
     mem_lake, _, _ = fixture_lake(spark)
-    root = str(tmp_path / "plain")
-    mem_lake.write_parquet(root)
     tx_root = str(tmp_path / "tx")
     TxTable(spark, f"{tx_root}/name_meta").append(mem_lake["name_meta"])
 
     monkeypatch.setattr(fsutil, "_is_local", lambda spark, path: False)
-    uri_root = "file:" + root
-    uri_tx = "file:" + tx_root
-    lake = ReadonlyLake.open(spark, root=uri_root, tx_root=uri_tx)
-    assert any("/tx/name_meta/data/" in f
-               for f in lake["name_meta"].inputFiles())
-    assert any("/plain/source_meta/" in f
-               for f in lake["source_meta"].inputFiles())
     tx_lake = ReadonlyLake.from_txlog(
-        spark, uri_tx,
+        spark, "file:" + tx_root,
         extra={n: mem_lake[n] for n in mem_lake.tables() if n != "name_meta"},
     )
     monkeypatch.undo()
+    assert any("/tx/name_meta/data/" in f
+               for f in tx_lake["name_meta"].inputFiles())
     q = HasAgent("MEK") & HasType(["Phosphorylation"])
     want = {r.mk_hash for r in get_hashes(q, mem_lake).collect()}
-    assert {r.mk_hash for r in get_hashes(q, lake).collect()} == want
     assert {r.mk_hash for r in get_hashes(q, tx_lake).collect()} == want
 
 
@@ -523,11 +415,12 @@ def test_fsutil_delete_survives_dead_gateway(spark, tmp_path, monkeypatch):
 def test_fsutil_and_chooser_over_real_second_scheme(spark, tmp_path):
     """Genuine second-scheme resolution (r9 verdict #8): mount a
     ``viewfs://`` namespace (hadoop-common's client-side federation FS)
-    over local disk and drive fsutil plus the layout-chooser entry point
+    over local disk and drive fsutil plus a release write and load
     against it WITHOUT monkeypatching — scheme_of must classify the root
-    as remote, every metadata op must resolve the FileSystem by scheme
-    from the Hadoop conf, and the data path must read parquet back
-    through the same URIs."""
+    as remote, every metadata op and log claim must resolve the
+    FileSystem by scheme from the Hadoop conf, and the data path must
+    read parquet back through the same URIs."""
+    from indra_db_spark.assembly.snapshot import load_release, write_release
     from indra_db_spark.plans import fsutil
 
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -539,26 +432,23 @@ def test_fsutil_and_chooser_over_real_second_scheme(spark, tmp_path):
         assert not fsutil._is_local(spark, root)
 
         spark.range(100).write.parquet(str(tmp_path / "tbl"))
-        (tmp_path / "tbl" / "_hidden").write_text("x" * 999)
-        assert fsutil.exists(spark, root + "/tbl")
         assert fsutil.is_dir(spark, root + "/tbl")
-        assert not fsutil.exists(spark, root + "/nope")
-        assert fsutil.dir_bytes(spark, root + "/tbl") == fsutil.dir_bytes(
-            spark, str(tmp_path / "tbl")
-        )
+        assert not fsutil.is_dir(spark, root + "/nope")
         fsutil.mkdirs(spark, root + "/made")
         assert (tmp_path / "made").is_dir()
         fsutil.delete(spark, root + "/made")
         assert not (tmp_path / "made").exists()
 
-        # the serving entry point over the mounted scheme, end to end:
-        # chooser metadata decisions AND the parquet data path both
-        # resolve viewfs:// URIs
+        # a release over the mounted scheme, end to end: log claims,
+        # the release record AND the parquet data path all resolve
+        # viewfs:// URIs
         mem_lake, _, _ = fixture_lake(spark)
-        mem_lake.write_parquet(root + "/plain")
-        lake = ReadonlyLake.open(spark, root=root + "/plain")
+        write_release(mem_lake, root + "/rel")
+        assert (tmp_path / "rel" / "_txlog" / "v000000000001.json").exists()
+        lake, problems = load_release(spark, root + "/rel")
+        assert problems == []
         assert all(
-            f.startswith("viewfs://r10test/lake/plain/")
+            f.startswith("viewfs://r10test/lake/rel/name_meta/data/")
             for f in lake["name_meta"].inputFiles()
         )
         q = HasAgent("MEK") & HasType(["Phosphorylation"])
@@ -882,15 +772,13 @@ def test_statement_page_prunes_evidence_scan_on_txlog_lake(spark, tmp_path):
 def test_lake_open_tolerates_config_only_txlog_version(spark, tmp_path):
     """A table whose HEAD is a config-only commit (set_stats_columns
     before the first append — exactly write_txlog(stats=True)'s crash
-    window) must read as not-yet-existing: from_txlog skips it and
-    open() falls through to the plain layout, instead of bricking the
-    whole lake open with ValueError."""
+    window) must read as not-yet-existing: from_txlog skips it (an
+    ``extra`` frame serves the name) instead of bricking the whole lake
+    open with ValueError."""
     from indra_db_spark.plans.txlog import TxTable
 
     mem_lake, _, _ = fixture_lake(spark)
     root = str(tmp_path / "txcfg")
-    plain = str(tmp_path / "plain")
-    mem_lake.write_parquet(plain)
     # source_meta: config committed, append NOT yet landed
     TxTable(spark, f"{root}/source_meta").set_stats_columns(
         "ev_count", bloom=("mk_hash",)
@@ -899,11 +787,7 @@ def test_lake_open_tolerates_config_only_txlog_version(spark, tmp_path):
         spark, root, extra=mem_lake.tables()
     )
     assert lake["source_meta"].count() == mem_lake["source_meta"].count()
-    opened = ReadonlyLake.open(spark, root=plain, tx_root=root)
-    assert (
-        opened["source_meta"].count() == mem_lake["source_meta"].count()
-    )
-    assert "source_meta" not in opened._tx  # served from plain parquet
+    assert "source_meta" not in lake._tx  # served from the extra frame
 
 
 @pytest.fixture(scope="module")

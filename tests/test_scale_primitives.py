@@ -1,5 +1,4 @@
-"""Scale-primitive tests: salted joins/aggs equal their plain forms, and
-bucketed tables join without an exchange on either side."""
+"""Scale-primitive tests: salted joins/aggs equal their plain forms."""
 
 from __future__ import annotations
 
@@ -9,8 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from indra_db_spark.operators.skew import salted_join, two_phase_agg
-from indra_db_spark.sources.bucketed import read_table, write_bucketed
-from indra_db_spark.sources.lake import load_table
 
 
 @pytest.fixture(scope="module")
@@ -42,37 +39,6 @@ def test_two_phase_agg_equals_plain(spark, skewed):
         r.k: (r.n, r["sum_v"]) for r in two_phase_agg(skewed, "k", "v").collect()
     }
     assert got == plain
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    # tables land in the default warehouse dir (gitignored spark-warehouse/);
-    # a fresh session's in-memory catalog doesn't know about directories a
-    # previous run left behind, so clear both catalog entries and locations
-    import shutil
-
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    )
-    write_bucketed(orders, "b_orders", "o_orderkey", buckets=8)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "b_lineitem",
-        "o_orderkey",
-        buckets=8,
-    )
-    joined = read_table(spark, "b_orders").join(
-        read_table(spark, "b_lineitem").hint("merge"), "o_orderkey"
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    # co-bucketed join: neither side shuffles
-    assert "Exchange hashpartitioning" not in plan
-    assert joined.count() == lineitem.count()
 
 
 def test_salted_join_rejects_outer(spark, skewed):

@@ -1,9 +1,12 @@
 """Serve a readonly lake over HTTP.
 
-    PYTHONPATH=. python tools/serve.py <release_dir|'fixture'> [port]
+    PYTHONPATH=. python tools/serve.py <release_root|'fixture'> [port]
 
-``release_dir`` is a directory written by assembly.snapshot.write_release
-(manifest-validated on load); ``fixture`` serves the synthetic test corpus.
+``release_root`` is a root written by assembly.snapshot.write_release: the
+lake's transaction-logged tables plus release records.  The newest record
+is served, opened at the table versions it names and validated against
+its recorded snapshot; tables committed after it (a release still being
+written) are not served.  ``fixture`` serves the synthetic test corpus.
 """
 
 from __future__ import annotations

@@ -20,13 +20,34 @@ import tempfile
 import time
 
 
+def amplified_rows(spark, factor: int):
+    """Fixture lake tables with `factor` hash-shifted copies of the model,
+    each repartitioned to defaultParallelism (a 1-2-file table measures
+    file layout, not the operator)."""
+    from pyspark.sql import functions as F
+
+    from indra_db_spark.plans.fixtures import fixture_lake
+
+    lake, _, _ = fixture_lake(spark)
+    par = spark.sparkContext.defaultParallelism
+    out = {}
+    for name, df in lake.tables().items():
+        if "mk_hash" in df.columns and factor > 1:
+            k = spark.range(factor).select(F.col("id").alias("_k"))
+            df = df.crossJoin(k).withColumn(
+                "mk_hash",
+                F.col("mk_hash") + F.col("_k") * F.lit(1 << 44),
+            ).drop("_k")
+        out[name] = df.repartition(par)
+    return out
+
+
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 200
 
     from indra_db_spark.plans.skipindex import index_tx_table, skip_scan
     from indra_db_spark.plans.txlog import TxTable
     from indra_db_spark.session import get_spark
-    from tools.bucketed_bench import amplified_rows
 
     spark = get_spark("txlog-algebra-bench")
     tables = amplified_rows(spark, factor)
