@@ -10,6 +10,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from indra_db_spark.plans.txlog import isin
 from indra_db_spark.schemas import ROLE_NUMS
 
 
@@ -88,9 +89,9 @@ def curations_for(
     per-statement list endpoint skips it for permissioned users."""
     out = curation
     if pa_hash is not None:
-        out = out.filter(F.col("pa_hash") == pa_hash)
+        out = out.filter(isin("pa_hash", [int(pa_hash)]))
     if source_hash is not None:
-        out = out.filter(F.col("source_hash") == source_hash)
+        out = out.filter(isin("source_hash", [int(source_hash)]))
     if tag is not None:
         out = out.filter(F.col("tag") == tag)
     return anonymize_curators(out, salt) if anonymize else out
@@ -130,13 +131,27 @@ class CurationStore:
         self._lock = threading.Lock()
         self._next_id = self._persisted_count() + 1
 
-    def _persisted_count(self) -> int:
+    def _persisted(self) -> DataFrame | None:
+        """The flushed log, or None while nothing was ever flushed (its
+        path does not exist yet).  Every other read failure propagates:
+        a log that cannot be read must not read as empty, or ids would
+        restart at 1 and counts and lists come out silently wrong."""
+        from pyspark.errors import AnalysisException
+
+        from indra_db_spark.schemas import CURATION_SCHEMA
+
         if self.path is None:
-            return 0
+            return None
         try:
-            return self.spark.read.parquet(self.path).count()
-        except Exception:
-            return 0
+            return self.spark.read.schema(CURATION_SCHEMA).parquet(self.path)
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
+
+    def _persisted_count(self) -> int:
+        persisted = self._persisted()
+        return 0 if persisted is None else persisted.count()
 
     def submit(
         self,
@@ -165,7 +180,7 @@ class CurationStore:
         hash_val = int(hash_val)
         if pa_statements is not None:
             hit = (
-                pa_statements.filter(F.col("mk_hash") == hash_val)
+                pa_statements.filter(isin("mk_hash", [hash_val]))
                 .select("mk_hash", "json")
                 .limit(1)
                 .collect()
@@ -221,10 +236,5 @@ class CurationStore:
         from indra_db_spark.session import local_artifact_df
 
         tail = local_artifact_df(self.spark, pending, CURATION_SCHEMA)
-        if self.path is None:
-            return tail
-        try:
-            persisted = self.spark.read.parquet(self.path)
-        except Exception:
-            return tail
-        return persisted.unionByName(tail)
+        persisted = self._persisted()
+        return tail if persisted is None else persisted.unionByName(tail)

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from indra_db_spark.operators.setops import keyed_intersect
 from indra_db_spark.plans.lake import ReadonlyLake
+from indra_db_spark.plans.txlog import isin
 from indra_db_spark.schemas import ROLE_NUMS, TYPE_NUMS, expand_types
 
 HASH_COLS = ["mk_hash", "ev_count", "belief"]
@@ -242,9 +243,7 @@ class HasHash(_PredicateQuery):
         return {"stmt_hashes": self.stmt_hashes}
 
     def _positive_predicate(self) -> Column:
-        if len(self.stmt_hashes) == 1:  # equality fast path (query.py:1567)
-            return F.col("mk_hash") == self.stmt_hashes[0]
-        return F.col("mk_hash").isin(self.stmt_hashes)
+        return isin("mk_hash", self.stmt_hashes)
 
     def _prune_hint(self) -> tuple[dict, dict]:
         # point lookups: mk_hash bloom words + range stats
@@ -348,7 +347,7 @@ class HasType(_IntrusiveQuery):
 
     def _positive_predicate(self) -> Column:
         nums = [TYPE_NUMS[t] for t in self.stmt_types if t in TYPE_NUMS]
-        return F.col("type_num").isin(nums)
+        return isin("type_num", nums)
 
 
 class HasNumAgents(_IntrusiveQuery):
@@ -368,7 +367,7 @@ class HasNumAgents(_IntrusiveQuery):
         return {"agent_nums": self.agent_nums}
 
     def _positive_predicate(self) -> Column:
-        return F.col("agent_count").isin(self.agent_nums)
+        return isin("agent_count", self.agent_nums)
 
 
 class HasNumEvidence(_IntrusiveQuery):
@@ -388,7 +387,7 @@ class HasNumEvidence(_IntrusiveQuery):
         return {"evidence_nums": self.evidence_nums}
 
     def _positive_predicate(self) -> Column:
-        return F.col("ev_count").isin(self.evidence_nums)
+        return isin("ev_count", self.evidence_nums)
 
     def _prune_hint(self) -> tuple[dict, dict]:
         # a file/segment is admitted only when SOME listed count falls
@@ -665,7 +664,7 @@ class FromMeshIds(Query):
         return universe.join(pos.select("mk_hash"), "mk_hash", "left_anti")
 
 
-#: reading_ref_link match key of each paper-id type (see :func:`_ref_col`)
+#: reading_ref_link match key of each paper-id type (see :func:`_ref_isin`)
 _REF_COLS = {
     "pmid": "pmid_num",
     "pmcid": "pmcid_num",
@@ -674,16 +673,16 @@ _REF_COLS = {
 }
 
 
-def _ref_col(key: str) -> Column:
-    """The reading_ref_link expression a :meth:`FromPapers._ref_keys` key
-    matches: the numeric id column, or for "doi" the (doi_ns, doi_id)
+def _ref_isin(key: str, vals: list) -> Column:
+    """reading_ref_link rows whose :meth:`FromPapers._ref_keys` key is in
+    ``vals``: the numeric id column, or for "doi" the (doi_ns, doi_id)
     PAIR as "ns/id" — doi_id alone collides across publisher namespaces
     (reference: mixins.py:431-446)."""
     if key == "doi":
         return F.concat_ws(
             "/", F.col("doi_ns").cast("string"), F.col("doi_id")
-        )
-    return F.col(key)
+        ).isin(vals)
+    return isin(key, vals)
 
 
 class FromPapers(Query):
@@ -715,7 +714,7 @@ class FromPapers(Query):
 
     def _ref_keys(self) -> dict[str, list]:
         """The paper list parsed into reading_ref_link match values per
-        :func:`_ref_col` key.  Ids that fail parsing are dropped: they
+        :func:`_ref_isin` key.  Ids that fail parsing are dropped: they
         match nothing."""
         from indra_db_spark.functions.ids import (
             process_doi,
@@ -746,7 +745,7 @@ class FromPapers(Query):
         filter (the evidence-level papers clause)."""
         out = F.lit(False)
         for key, vals in self._ref_keys().items():
-            out = out | _ref_col(key).isin(vals)
+            out = out | _ref_isin(key, vals)
         return out
 
     def _ref_rows(self, lake) -> DataFrame:
@@ -758,7 +757,7 @@ class FromPapers(Query):
         the caller's rid-level distinct collapses it."""
         refs = lake["reading_ref_link"]
         parts = [
-            refs.filter(_ref_col(key).isin(vals))
+            refs.filter(_ref_isin(key, vals))
             if key == "doi"
             else lake.pruned("reading_ref_link", eq={key: vals})
             for key, vals in self._ref_keys().items()
@@ -815,7 +814,7 @@ class FromAgentJson(Query):
         if self.stmt_type is not None:
             df = df.filter(F.col("type_num") == TYPE_NUMS[self.stmt_type])
         if self.stmt_hashes is not None:
-            df = df.filter(F.col("mk_hash").isin(self.stmt_hashes))
+            df = df.filter(isin("mk_hash", self.stmt_hashes))
         pos = (
             _apply_preds(df, intrusives)
             .select(*HASH_COLS)

@@ -63,8 +63,8 @@ log" gap called out in round 6's verdict for incremental 100-TB serving.
 from __future__ import annotations
 
 import bisect
+import functools
 import json
-import math
 import os
 import time
 import uuid
@@ -184,37 +184,79 @@ def eq_lists(eq: dict | None) -> dict[str, list]:
     }
 
 
-def _sql_literal(v) -> str | None:
-    """``v`` spelled as the Spark SQL literal of the type ``F.lit(v)``
-    gives it, or None when it has no such spelling here."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v) if -(1 << 63) <= v < 1 << 63 else None
-    if isinstance(v, float):
-        return f"{v!r}D" if math.isfinite(v) else None
-    if isinstance(v, str) and "'" not in v and "\\" not in v:
-        # no escapes: their meaning depends on a parser setting
-        return f"'{v}'"
-    return None
+def _is_long(v) -> bool:
+    return (
+        isinstance(v, int)
+        and not isinstance(v, bool)
+        and -(1 << 63) <= v < 1 << 63
+    )
+
+
+#: joins a string list for its one trip to the JVM (see :func:`isin`)
+_SEP = "\x00"
+
+
+@functools.lru_cache(maxsize=None)
+def _jvm_attr(jvm, path: str):
+    """``jvm.<path>``, a class or a static method, looked up once per
+    gateway: each step of a lookup is a py4j round trip."""
+    return functools.reduce(getattr, path.split("."), jvm)
 
 
 def isin(c: str, vals: list) -> Column:
-    """``F.col(c).isin(vals)`` built in ONE JVM call: SQL IN-list text
-    when ``c`` is a plain (optionally dotted) name and every value has
-    an exact literal spelling.  ``isin`` itself makes one py4j round
-    trip per value, which a page-sized key list pays thousands of
-    times per request."""
+    """``F.col(c).isin(vals)`` with the values bound as DATA, never as
+    code: ``CAST(c AS <type>) INSET vals``, the set built on the JVM
+    from one packed ``long[]`` or one joined string (a fixed handful of
+    py4j calls at any list length; ``F.col(c).isin`` makes one per
+    value).
+
+    Spark's code generator spells integral literals into the generated
+    Java, and an ``IN`` list of at most ``inSetConversionThreshold``
+    values is one generated branch per value; only an ``InSet`` passes
+    its values by reference, as a hash set.  So an ``==`` or a short
+    ``IN`` is new code for every new key, and a served request would
+    pay a Janino compile plus JIT work for each of its point lookups.
+    Here every integer or string list is an ``InSet`` of the same set
+    class at any length (the generated code casts the reference to it),
+    and ``spark.sql.optimizer.inSetSwitchThreshold`` is 0 in
+    :data:`session.DEFAULT_CONF`, so an int-typed ``InSet`` looks its
+    values up in the set instead of a generated ``switch``.  The
+    optimizer drops the cast again for a column of that type (or
+    unwraps it for a narrower integral one), so parquet pushdown and
+    ``_metadata`` file pruning see the same filter as an ``IN`` list.
+    The cast sets the contract: integers probe an integral column and
+    strings a string column.  Other values (floats, None, a string
+    holding NUL) take ``F.col(c).isin``."""
+    import struct
+
+    from pyspark import SparkContext
     from pyspark.sql import functions as F
 
-    lits = [_sql_literal(v) for v in vals]
-    parts = c.split(".")
-    if not vals or None in lits or not all(p.isidentifier() for p in parts):
+    j = functools.partial(_jvm_attr, SparkContext._jvm)
+    if vals and all(_is_long(v) for v in vals):
+        arr = SparkContext._gateway.new_array(j("long"), len(vals))
+        j("java.nio.ByteBuffer.wrap")(
+            struct.pack(f">{len(vals)}q", *vals)
+        ).asLongBuffer().get(arr)
+        typ = "bigint"
+    elif vals and all(isinstance(v, str) and _SEP not in v for v in vals):
+        utf8 = j("org.apache.spark.unsafe.types.UTF8String.fromString")
+        arr = utf8(_SEP.join(vals)).split(utf8(_SEP), -1)
+        typ = "string"
+    else:
         return F.col(c).isin(vals)
-    name = ".".join(f"`{p}`" for p in parts)
-    return F.expr(f"{name} IN ({', '.join(lits)})")
+    # built with JVM calls alone: PySpark's own column functions add
+    # several round trips each (session lookup, call-site capture)
+    expressions = "org.apache.spark.sql.classic.ExpressionUtils"
+    inset = j("org.apache.spark.sql.catalyst.expressions.InSet")(
+        j(f"{expressions}.expression")(
+            j("org.apache.spark.sql.functions.col")(c).cast(typ)
+        ),
+        j("scala.collection.immutable.HashSet.from")(
+            j("scala.collection.immutable.ArraySeq.unsafeWrapArray")(arr)
+        ),
+    )
+    return Column(j(f"{expressions}.column")(inset))
 
 
 def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
@@ -222,7 +264,10 @@ def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
     ``boxes`` entry (a None edge is open) AND ``col IN vals`` per
     ``eqs`` entry (an empty list matches nothing).  Every leaf scan
     applies it on top of whatever pruning chose the files, so the rows
-    returned never depend on the stats."""
+    returned never depend on the stats.  The point values go through
+    :func:`isin`, even a single one: they are the request's keys, and
+    bound as data they leave the generated code the same for every
+    request of a shape."""
     from pyspark.sql import functions as F
 
     cond = F.lit(True)
@@ -232,9 +277,7 @@ def residual_filter(boxes: dict, eqs: dict[str, list]) -> Column:
         if hi is not None:
             cond = cond & (F.col(c) <= F.lit(hi))
     for c, vals in eqs.items():
-        cond = cond & (
-            (F.col(c) == F.lit(vals[0])) if len(vals) == 1 else isin(c, vals)
-        )
+        cond = cond & isin(c, vals)
     return cond
 
 

@@ -64,7 +64,7 @@ from indra_db_spark.plans.queries import FromAgentJson, FromMeshIds, FromPapers,
 from indra_db_spark.plans.shaping import (
     DEFAULT_EV_LIMIT,
     EvidenceFilter,
-    get_agents,
+    get_agents_json,
     get_hashes,
     get_interactions,
     get_relations,
@@ -223,19 +223,19 @@ def make_handler(
                     df = render_english(df)
                 return {"results": _rows_json(df, None)}
             # agents: stateful complex paging — covered hashes ride the
-            # response so the client can carry them to the next page
-            df, covered = get_agents(
-                query, lake, limit=page["limit"],
-                complexes_covered=complexes_covered,
+            # response so the client can carry them to the next page.
+            # The agents grain carries no single type, so with_english
+            # takes the reference's bolded meta fallback (util.py:144-165)
+            extra = (
+                [meta_english_expr(F.col("agent_json")).alias("english")]
+                if w_english
+                else []
             )
-            if w_english:
-                # agents grain carries no single type — the reference
-                # uses the bolded meta fallback here (util.py:144-165)
-                df = df.withColumn(
-                    "english", meta_english_expr(F.col("agent_json"))
-                )
+            rows, covered = get_agents_json(
+                query, lake, page["limit"], complexes_covered, extra
+            )
             return {
-                "results": _rows_json(df, None),
+                "results": [json.loads(s) for s in rows],
                 "complexes_covered": sorted(covered),
             }
 

@@ -866,3 +866,98 @@ def test_rest_answers_engine_faults_with_500(spark, tmp_path):
         assert json.load(urlopen(f"{base}/health")) == {"status": "ok"}
     finally:
         server.shutdown()
+
+
+def test_curation_store_only_a_missing_log_reads_empty(spark, tmp_path):
+    """A store over a path nothing was flushed to starts ids at 1 and
+    lists nothing; a log that exists but cannot be read raises — at
+    open (ids must not restart at 1) and in ``df()`` (counts and lists
+    must not come out silently empty) — and REST answers the list
+    route with a JSON 500."""
+    import json
+    from urllib.error import HTTPError
+    from urllib.request import urlopen
+
+    from indra_db_spark.plans.principal import CurationStore
+    from indra_db_spark.service.rest import serve
+
+    path = tmp_path / "curation_log"
+    store = CurationStore(spark, str(path))
+    assert store.df().count() == 0
+    assert store.submit(7, "correct", "alice@example.org", "::1") == 1
+    assert store.submit(7, "grounding", "bob@example.org", "::1") == 2
+
+    (path / "part-99999-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        CurationStore(spark, str(path))
+    with pytest.raises(Exception):
+        store.df().count()
+    server = serve(None, curation=store)
+    host, port = server.server_address
+    try:
+        with pytest.raises(HTTPError) as e:
+            urlopen(f"http://{host}:{port}/curation/list")
+        assert e.value.code == 500
+        assert json.load(e.value)["error"]
+    finally:
+        server.shutdown()
+
+
+def test_warm_server_compiles_no_code_per_request_key(spark, tmp_path):
+    """Per-request keys are bound as data (``plans.txlog.isin``), so a
+    warm server answers fresh-valued pages of a shape it has served
+    without generating new code: after one request per shape, fresh
+    from_hash, from_papers and from_agents statement pages raise
+    Spark's codegen compile count by at most 1 per request on average
+    (a key spelled into the generated Java costs every such request
+    a compile per plan stage)."""
+    import json
+    from urllib.request import Request, urlopen
+
+    from indra_db_spark.plans.fixtures import fixture_lake
+    from indra_db_spark.plans.lake import ReadonlyLake
+    from indra_db_spark.service.rest import serve
+
+    mem_lake, stmts, papers = fixture_lake(spark)
+    root = str(tmp_path / "lake")
+    mem_lake.write_txlog(spark, root, stats=True)
+    lake = ReadonlyLake.from_txlog(spark, root)
+    server = serve(lake)
+    host, port = server.server_address
+    base = f"http://{host}:{port}"
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    page = "limit=5&ev_limit=3"
+
+    def from_hash(h):
+        return f"{base}/statements/from_hash/{h}?{page}"
+
+    def from_papers(pmid):
+        body = {"ids": [{"type": "pmid", "id": pmid}], "limit": 5, "ev_limit": 3}
+        return Request(
+            f"{base}/statements/from_papers",
+            data=json.dumps(body).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+
+    def from_agents(name):
+        return f"{base}/statements/from_agents?agent={name}&{page}"
+
+    hashes = sorted({s.mk_hash for s in stmts})
+    pmids = sorted({p.pmid for p in papers})
+    agents = ["ERK", "TP53", "MEK", "Vemurafenib"]
+    warm = [from_hash(hashes[0]), from_papers(pmids[0]), from_agents(agents[0])]
+    fresh = (
+        [from_hash(h) for h in hashes[1:5]]
+        + [from_papers(p) for p in pmids[1:4]]
+        + [from_agents(a) for a in agents[1:]]
+    )
+    try:
+        for req in warm:
+            assert json.load(urlopen(req))["statements"]
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for req in fresh:
+            assert "statements" in json.load(urlopen(req))
+        compiles = metrics.METRIC_COMPILATION_TIME().getCount() - before
+    finally:
+        server.shutdown()
+    assert compiles <= len(fresh), (compiles, len(fresh))

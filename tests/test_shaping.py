@@ -178,3 +178,42 @@ def test_get_agents_harvest_is_bounded_and_unpersistable(fx):
     assert df.storageLevel.useMemory
     df.unpersist()
     assert not df.storageLevel.useMemory
+
+
+def test_get_agents_json_is_one_collect_of_get_agents_page(fx, spark):
+    """The REST agents page comes from ONE collect: the same JSON bytes
+    toJSON writes over get_agents' page (with and without an extra
+    column riding the rows), the same covered-complex harvest, and one
+    job fewer than get_agents plus a toJSON pass over its frame."""
+    from indra_db_spark.functions.english import meta_english_expr
+    from indra_db_spark.plans.shaping import get_agents_json
+
+    lake, stmts = fx
+    q = HasType(["Complex", "Phosphorylation"])
+    covered0 = {s.mk_hash for s in stmts if s.stmt_type == "Complex"}
+    english = meta_english_expr(F.col("agent_json")).alias("english")
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(group, fn):
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    for extra, covered_in in (([], None), ([english], set(list(covered0)[:2]))):
+        def two_passes():
+            df, covered = get_agents(q, lake, 7, covered_in)
+            for col in extra:
+                df = df.withColumn("english", col)
+            return df.toJSON().collect(), covered
+
+        (want, want_cov), n_want = jobs(f"agents-df-{len(extra)}", two_passes)
+        (got, got_cov), n_got = jobs(
+            f"agents-json-{len(extra)}",
+            lambda: get_agents_json(q, lake, 7, covered_in, extra),
+        )
+        assert got == want and len(got) == 7
+        assert got_cov == want_cov
+        assert n_got == n_want - 1
