@@ -1292,16 +1292,14 @@ class TxTable:
         those files (page-warm, O(delta)), collected at write time so the
         manifest's skipping stats are always fresh and no read-side index
         rebuild ever scans the table (the Iceberg column-stats-in-manifest
-        shape; contrast :func:`plans.skipindex.index_tx_table`, which
-        re-scans the snapshot per refresh for pre-stats tables).
+        shape).
 
         Bloom entries are self-describing ``[m, k, {word: mask}]`` (the
         config could change over the table's life; a probe must use the
         m/k the words were hashed under) and use the same xxhash64
         mapping as :func:`plans.skipindex._bloom_pos_sql`, so
-        driver-side probes
-        (:meth:`skip_read`, :func:`plans.skipindex._py_bloom_hit`) line
-        up bit-for-bit with SQL-built filters.  Size per file per column
+        :meth:`skip_read`'s driver-side probes line up bit-for-bit with
+        SQL-built filters.  Size per file per column
         is capped by construction at min(k·distinct, m/64) words.
 
         ``bloom_seg_m`` > ``bloom_m`` additionally packs a SECOND set of
@@ -1930,9 +1928,8 @@ class TxTable:
         *more_cols) — any number of dimensions, one
         ``repartitionByRange`` shuffle on the z-value + within-partition
         sort, so every output file covers a tight axis-aligned box and a
-        later :func:`plans.skipindex.index_tx_table` +
-        :func:`plans.skipindex.skip_scan` (or the manifest's own
-        :meth:`skip_read`) prunes almost every file for a box predicate.
+        later :meth:`skip_read` over the manifest's stats prunes almost
+        every file for a box predicate.
         Per-dimension resolution defaults to the 63-bit interleave
         budget split across the dimensions
         (:func:`plans.skipindex.zorder_arrange_n`).  Transactionally it IS a compaction: same
@@ -2049,8 +2046,7 @@ class TxTable:
         the just-staged files, the manifest carries the entries (inline
         or inside segments), and :meth:`skip_read` prunes files
         manifest-side with zero table scans — the Iceberg
-        column-stats-in-manifest shape, vs
-        :func:`plans.skipindex.index_tx_table`'s rebuild-by-rescan.
+        column-stats-in-manifest shape.
 
         Files committed BEFORE this call (and segments reused from then)
         have no entries and are never pruned; a :meth:`compact` /
@@ -2065,10 +2061,8 @@ class TxTable:
         of ``bloom_m`` bits / ``bloom_k`` hashes for each listed
         int/string column into the stats entries — the POINT-LOOKUP
         complement to min/max (which only prunes under a sympathetic
-        layout): :meth:`skip_read`'s ``eq`` probes and
-        :func:`plans.skipindex.index_tx_table`'s bloom path then prove
-        absence per file with zero table scans (r10 verdict next-round
-        #2).  Size rides the manifest segments: ≈ min(k·distinct, m/64)
+        layout): :meth:`skip_read`'s ``eq`` probes then prove absence
+        per file with zero table scans (r10 verdict next-round #2).  Size rides the manifest segments: ≈ min(k·distinct, m/64)
         words × ~25 B per file per column — budget ``bloom_m`` for the
         expected distinct-per-file (8192 bits ≈ 1 % FPR at ~850
         distinct).  The call records the WHOLE config: stats columns and
@@ -2124,23 +2118,6 @@ class TxTable:
                 return base + 1
         raise RuntimeError(
             f"set_stats_columns lost {max_retries} commit races"
-        )
-
-    def bloom_spec(self) -> tuple[tuple[str, ...], int, int] | None:
-        """The manifest-recorded bloom config (cols, m, k), or None —
-        callers probing a manifest-built index
-        (:func:`plans.skipindex.skip_scan`) must hash with the m/k the
-        words were packed under."""
-        vs = self._versions()
-        if not vs:
-            return None
-        body = self._read_version_raw(vs[-1])
-        if not body.get("bloom_cols"):
-            return None
-        return (
-            tuple(body["bloom_cols"]),
-            body["bloom_m"],
-            body["bloom_k"],
         )
 
     def skip_read(
@@ -2535,9 +2512,7 @@ class TxTable:
 
         1. locate affected files: scan the snapshot with
            ``input_file_name()`` semi-joined against the update keys —
-           only files actually holding a matched key are rewritten (at
-           100 TB the skip index (plans/skipindex.py) prunes this scan to
-           the candidate files by key bounds before any row is read);
+           only files actually holding a matched key are rewritten;
         2. rewrite = (affected rows anti-joined on key) ∪ updates, staged
            invisibly; every UNAFFECTED file survives untouched — merge
            cost scales with files-touched, not table size;
@@ -2685,8 +2660,8 @@ class TxTable:
         self, predicate, max_retries: int = 20, mode: str = "copy"
     ) -> int | None:
         """Row-level DELETE: copy-on-write rewrite of exactly the files
-        holding matching rows (located via ``input_file_name()``; the
-        skip index prunes candidates at scale).  Files with no match
+        holding matching rows (located via ``input_file_name()``).
+        Files with no match
         survive untouched, so deleting a needle from a 100 TB table
         rewrites one file.  Returns the new version, or None when nothing
         matches.  Conflict rule = compaction's: a concurrent commit that

@@ -465,12 +465,24 @@ def make_handler(
 
         # ----------------------------------------------------------- POST
 
+        def _json_body(self) -> dict:
+            """The request body, which must be a JSON object.  The length
+            is checked before reading: ``rfile.read`` of a negative length
+            would block until the client hangs up."""
+            raw = self.headers.get("Content-Length", "0")
+            n = int(raw) if raw.strip().isdigit() else -1
+            if n < 0:
+                raise WebQueryError(f"bad Content-Length {raw!r}")
+            body = json.loads(self.rfile.read(n) or b"{}")
+            if not isinstance(body, dict):
+                raise WebQueryError("request body must be a JSON object")
+            return body
+
         def do_POST(self) -> None:
             url = urlparse(self.path)
             qs = parse_qs(url.query)
-            n = int(self.headers.get("Content-Length", "0"))
             try:
-                body = json.loads(self.rfile.read(n) or b"{}")
+                body = self._json_body()
                 parts = url.path.strip("/").split("/")
                 if parts[0] == "compile":
                     # reference route is /compile/<fmt> (api.py:527);

@@ -252,26 +252,24 @@ def test_algebra_served_from_txlog_snapshot(spark, tmp_path):
             }, name
 
 
-def test_txlog_algebra_skip_scan_prunes_files(spark, tmp_path):
-    """OPTIMIZE (z-order on mk_hash × ev_count) + the skipping index over
-    the txlog snapshot prune a selective hash-range probe of the
+def test_txlog_algebra_skip_read_prunes_files(spark, tmp_path):
+    """OPTIMIZE (z-order on mk_hash × ev_count) + the manifest's stats
+    over the txlog snapshot prune a selective hash-range probe of the
     algebra's own name_meta to a fraction of the files, with result
     parity against the full scan — the composition the lake uses instead
     of the reference's clustered btree (SCALING.md §1c)."""
-    from indra_db_spark.plans.skipindex import index_tx_table, skip_scan
     from indra_db_spark.plans.txlog import TxTable
 
     mem_lake, _, _ = fixture_lake(spark)
     t = TxTable(spark, str(tmp_path / "name_meta"))
+    t.set_stats_columns("mk_hash", "ev_count")
     t.append(mem_lake["name_meta"])
-    assert t.optimize("mk_hash", "ev_count", n_files=8) == 2
-    version, idx = index_tx_table(t, "mk_hash", "ev_count")
-    assert version == 2
+    assert t.optimize("mk_hash", "ev_count", n_files=8) == 3
     full = t.read()
     lo = full.agg({"mk_hash": "min"}).first()[0]
     hi = lo + max(1, (full.agg({"mk_hash": "max"}).first()[0] - lo) // 16)
-    got, files_read, files_total = skip_scan(
-        spark, idx, predicates={"mk_hash": (lo, hi)}
+    got, files_read, files_total = t.skip_read(
+        predicates={"mk_hash": (lo, hi)}
     )
     want = full.filter(full.mk_hash.between(lo, hi))
     assert {r.mk_hash for r in got.collect()} == {

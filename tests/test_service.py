@@ -403,6 +403,42 @@ def test_rest_page_args_validated(spark):
         server.shutdown()
 
 
+def test_rest_malformed_body_is_a_400():
+    """A POST whose Content-Length is not a number, is negative, or
+    whose JSON body is not an object gets a JSON 400 promptly — not a
+    dropped connection, a read that blocks until the client gives up, or
+    a 500."""
+    import json
+    import socket
+
+    from indra_db_spark.service.rest import serve
+
+    server = serve(None)  # body validation runs before any route reads the lake
+    host, port = server.server_address
+    cases = (
+        ("abc", b""),
+        ("-1", b""),
+        ("2", b"[]"),
+    )
+    try:
+        for length, body in cases:
+            with socket.create_connection((host, port), timeout=10) as sock:
+                sock.sendall(
+                    b"POST /statements/from_hashes HTTP/1.1\r\n"
+                    b"Host: test\r\nContent-Type: application/json\r\n"
+                    + f"Content-Length: {length}\r\n\r\n".encode()
+                    + body
+                )
+                resp = b""
+                while chunk := sock.recv(65536):
+                    resp += chunk
+            head, _, payload = resp.partition(b"\r\n\r\n")
+            assert head.split(b" ")[1:2] == [b"400"], (length, resp)
+            assert "error" in json.loads(payload), (length, resp)
+    finally:
+        server.shutdown()
+
+
 def test_rest_route_parity(spark):
     """The reference's full route surface (api.py:359-418 dispatch +
     curation endpoints api.py:570-639): every result type and method the

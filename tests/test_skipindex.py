@@ -1,20 +1,18 @@
-"""Z-order layout + file-stats index + skip-scan reader (plans/skipindex):
-result parity with the full scan is unconditional; the measured point is
-that the z-ordered layout actually excludes most files for a box predicate
-while a random layout cannot."""
+"""Data skipping through the transaction-log manifest (plans/skipindex +
+``TxTable.skip_read``): the z-order layout, the bloom hash scheme, and
+the pruning rules skip_read applies to manifest-carried stats.  Result
+parity with the full scan is unconditional; the measured point is that
+the z-ordered layout excludes most files for a box predicate while a
+random layout cannot, and that blooms prune point lookups under any
+layout."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from indra_db_spark.plans.skipindex import (
-    build_file_index,
-    column_bounds,
-    skip_scan,
-    write_zordered,
-    zvalue_bounds_expr,
-)
+from indra_db_spark.plans.skipindex import column_bounds, zvalue_bounds_expr
+from indra_db_spark.plans.txlog import TxTable
 from indra_db_spark.sources.lake import load_table
 
 
@@ -40,13 +38,26 @@ def _box(docs):
     }
 
 
+def _stats_table(spark, root, df, *cols, bloom=()):
+    t = TxTable(spark, str(root))
+    t.set_stats_columns(*cols, bloom=bloom)
+    t.append(df)
+    return t
+
+
 def test_skip_scan_parity_and_pruning(spark, docs, tmp_path_factory):
-    zpath = str(tmp_path_factory.mktemp("zorder"))
-    write_zordered(docs, zpath, "doc_id", "n_chars", n_files=16)
-    idx = build_file_index(spark, zpath, "doc_id", "n_chars")
+    """OPTIMIZE's z-order layout makes the manifest's min/max selective
+    in both dimensions: skip_read's box prunes at least half of 16
+    files, fewer than the same stats prune over a random layout, and
+    its result equals the full filter."""
+    zt = _stats_table(
+        spark, tmp_path_factory.mktemp("zorder") / "t", docs,
+        "doc_id", "n_chars",
+    )
+    zt.optimize("doc_id", "n_chars", n_files=16)
     preds = _box(docs)
 
-    got, files_read, files_total = skip_scan(spark, idx, preds)
+    got, files_read, files_total = zt.skip_read(predicates=preds)
     want = docs.filter(
         F.col("doc_id").between(*preds["doc_id"])
         & F.col("n_chars").between(*preds["n_chars"])
@@ -55,17 +66,16 @@ def test_skip_scan_parity_and_pruning(spark, docs, tmp_path_factory):
     assert sorted(r.doc_id for r in got.collect()) == sorted(
         r.doc_id for r in want.collect()
     )
-    # the pruning claim: a 10%×50% box over 16 z-ordered files must
-    # exclude at least half the files
     assert files_total == 16
     assert files_read <= files_total // 2
 
-    # against a layout-free baseline the same index prunes ~nothing —
+    # against a layout-free baseline the same stats prune ~nothing —
     # the win is the LAYOUT, not the manifest machinery
-    rpath = str(tmp_path_factory.mktemp("random_layout"))
-    docs.repartition(16).write.mode("overwrite").parquet(rpath)
-    ridx = build_file_index(spark, rpath, "doc_id", "n_chars")
-    rgot, rread, rtotal = skip_scan(spark, ridx, preds)
+    rt = _stats_table(
+        spark, tmp_path_factory.mktemp("random_layout") / "t",
+        docs.repartition(16), "doc_id", "n_chars",
+    )
+    rgot, rread, rtotal = rt.skip_read(predicates=preds)
     assert sorted(r.doc_id for r in rgot.collect()) == sorted(
         r.doc_id for r in want.collect()
     )
@@ -73,50 +83,58 @@ def test_skip_scan_parity_and_pruning(spark, docs, tmp_path_factory):
 
 
 def test_skip_scan_empty_box(spark, docs, tmp_path_factory):
-    zpath = str(tmp_path_factory.mktemp("zorder_empty"))
-    write_zordered(docs, zpath, "doc_id", "n_chars", n_files=8)
-    idx = build_file_index(spark, zpath, "doc_id", "n_chars")
-    b = column_bounds(docs, "doc_id")
-    out, nread, ntotal = skip_scan(
-        spark, idx, {"doc_id": (b["doc_id"][1] + 10, b["doc_id"][1] + 20)}
+    """A box beyond every file's range prunes every data file:
+    skip_read opens only the one schema carrier and returns no rows."""
+    zt = _stats_table(
+        spark, tmp_path_factory.mktemp("zorder_empty") / "t", docs,
+        "doc_id", "n_chars",
     )
-    assert out.count() == 0 and nread == 0 and ntotal == 8
+    zt.optimize("doc_id", "n_chars", n_files=8)
+    hi = column_bounds(docs, "doc_id")["doc_id"][1]
+    out, nread, ntotal = zt.skip_read(
+        predicates={"doc_id": (hi + 10, hi + 20)}
+    )
+    assert out.count() == 0 and nread == 1 and ntotal == 8
 
 
 def test_bloom_point_lookup_prunes_under_any_layout(
     spark, docs, tmp_path_factory
 ):
-    """Equality lookup on a high-cardinality column via per-file blooms:
-    min/max can't prune a random layout (every file spans ~the full id
-    range) but the bloom narrows a point lookup to ~1 file — and a miss
-    (absent id) prunes everything."""
-    rpath = str(tmp_path_factory.mktemp("bloom_layout"))
-    docs.repartition(16).write.mode("overwrite").parquet(rpath)
-    idx = build_file_index(
-        spark, rpath, "doc_id", bloom_cols=("doc_id",)
+    """Equality lookup on a high-cardinality column via the manifest's
+    per-file blooms: min/max can't prune a random layout (every file
+    spans ~the full id range) but the bloom narrows a point lookup to ~1
+    file — and an absent id inside every range reads only the schema
+    carrier."""
+    hi = docs.agg(F.max("doc_id")).first()[0]
+    some_id, absent_id = hi - 7, hi - 9
+    t = _stats_table(
+        spark, tmp_path_factory.mktemp("bloom_layout") / "t",
+        docs.filter(F.col("doc_id") != absent_id).repartition(16),
+        "doc_id", bloom=("doc_id",),
     )
-    some_id = docs.agg(F.max("doc_id")).first()[0] - 7
 
-    got, nread, ntotal = skip_scan(spark, idx, eq={"doc_id": some_id})
+    got, nread, ntotal = t.skip_read(eq={"doc_id": some_id})
     want = docs.filter(F.col("doc_id") == some_id)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
     assert want.count() == 1
     assert ntotal == 16
-    # the id lives in exactly one file; ~2% FPR may add a stray file
+    # the id lives in exactly one file; the FPR may add a stray file
     assert nread <= 3, nread
     # min/max alone could not have pruned this layout
-    mm_keep = [
-        r
-        for r in idx.collect()
-        if r["doc_id_min"] <= some_id <= r["doc_id_max"]
-    ]
-    assert len(mm_keep) > nread
+    stats = t._stats_of(t._read_version(t.snapshot()[0]))
 
-    # absent key: bloom proves absence, zero files read
-    _, n0, _ = skip_scan(spark, idx, eq={"doc_id": -12345})
-    assert n0 == 0
+    def mm_keep(v):
+        return sum(
+            1 for st in stats.values()
+            if st["c"]["doc_id"][0] <= v <= st["c"]["doc_id"][1]
+        )
+
+    assert mm_keep(some_id) > nread
+    # absent key: the blooms prove absence where min/max admits files
+    out, n0, _ = t.skip_read(eq={"doc_id": absent_id})
+    assert out.count() == 0 and n0 == 1 < mm_keep(absent_id)
 
 
 def test_zvalue_locality(spark, docs):
@@ -150,44 +168,6 @@ def test_zvalue_locality(spark, docs):
     # a random ordering's mean |Δn_chars| is ≈ span/3; the z-curve's must
     # be a small fraction of that
     assert mean_jump < span / 6
-
-
-def test_index_tx_table_snapshot_consistent(spark, tmp_path_factory):
-    """Index built from the txlog manifest, not the directory: dead files
-    left by compaction (pre-vacuum) never enter the index, and skip_scan
-    over it equals the snapshot read."""
-    import os
-
-    from indra_db_spark.plans.skipindex import index_tx_table
-    from indra_db_spark.plans.txlog import TxTable
-
-    root = str(tmp_path_factory.mktemp("txidx") / "t")
-    t = TxTable(spark, root)
-    t.append(
-        spark.range(0, 200).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-        )
-    )
-    t.append(
-        spark.range(200, 400).select(
-            F.col("id").alias("k"), (F.col("id") * 3).alias("v")
-        )
-    )
-    t.compact()  # rewrites data; old files stay on disk until vacuum
-
-    version, idx = index_tx_table(t, "k", bloom_cols=("k",))
-    live = set(t.snapshot()[1])
-    on_disk = set(os.listdir(f"{root}/data"))
-    assert on_disk - live, "compaction must leave dead files for this test"
-    indexed = {r.file.rsplit("/", 1)[-1] for r in idx.select("file").collect()}
-    assert indexed == live
-
-    got, nread, ntotal = skip_scan(spark, idx, eq={"k": 123})
-    assert [(r.k, r.v) for r in got.collect()] == [(123, 369)]
-    assert nread <= ntotal
-    want = sorted(map(tuple, t.read(version).collect()))
-    full, _, _ = skip_scan(spark, idx, predicates={"k": (0, 400)})
-    assert sorted(map(tuple, full.collect())) == want
 
 
 def test_zvalue_n_dims_cross_engine(spark, docs):
@@ -229,128 +209,71 @@ def test_zvalue_n_dims_cross_engine(spark, docs):
         zvalue_sql("a", "b", "c", "d", bits=16)
 
 
-def test_extend_file_index_matches_full_rebuild(spark, tmp_path_factory):
-    """Appending to a txlog table and extending the index over just the
-    new files must equal rebuilding from scratch (per-file rows are
-    independent) — the O(appended bytes) maintenance path."""
-    from indra_db_spark.plans.skipindex import (
-        extend_file_index,
-        index_tx_table,
-    )
-    from indra_db_spark.plans.txlog import TxTable
+def test_skip_read_ignores_files_dead_after_compaction(
+    spark, tmp_path_factory
+):
+    """skip_read prunes the manifest's LIVE file list, not the
+    directory: files left on disk by compaction (pre-vacuum) are never
+    read, and a full-range box equals the snapshot read."""
+    import os
 
-    root = str(tmp_path_factory.mktemp("txinc") / "t")
+    root = str(tmp_path_factory.mktemp("txidx") / "t")
     t = TxTable(spark, root)
-    t.append(
-        spark.range(0, 100).select(
-            F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    t.set_stats_columns("k", bloom=("k",))
+    for lo in (0, 200):
+        t.append(
+            spark.range(lo, lo + 200).select(
+                F.col("id").alias("k"), (F.col("id") * 3).alias("v")
+            )
         )
+    t.compact()  # rewrites data; old files stay on disk until vacuum
+    version, live = t.snapshot()[:2]
+    on_disk = set(os.listdir(f"{root}/data"))
+    assert on_disk - set(live), "compaction must leave dead files"
+
+    got, nread, ntotal = t.skip_read(eq={"k": 123})
+    assert [(r.k, r.v) for r in got.collect()] == [(123, 369)]
+    assert nread <= ntotal == len(live)
+    full, _, _ = t.skip_read(predicates={"k": (0, 400)})
+    read = {f.rsplit("/", 1)[-1] for f in full.inputFiles()}
+    assert read <= set(live)
+    assert sorted(map(tuple, full.collect())) == sorted(
+        map(tuple, t.read(version).collect())
     )
-    _, idx1 = index_tx_table(t, "k", bloom_cols=("k",))
-    before = set(t.snapshot()[1])
-    t.append(
-        spark.range(100, 250).select(
-            F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-        )
-    )
-    new = [
-        f"{t.root}/data/{n}" for n in t.snapshot()[1] if n not in before
-    ]
-    assert new
-    inc = extend_file_index(spark, idx1, new, "k", bloom_cols=("k",))
-    _, full = index_tx_table(t, "k", bloom_cols=("k",))
-
-    def norm(df):
-        return sorted(
-            (r.file, r.n_rows, r.k_min, r.k_max, tuple(sorted(r.k_bloom.items())))
-            for r in df.collect()
-        )
-
-    assert norm(inc) == norm(full)
-    # and the extended index serves lookups over the whole table
-    got, nread, ntotal = skip_scan(spark, inc, eq={"k": 201})
-    assert [r.k for r in got.collect()] == [201] and nread <= ntotal
 
 
-def test_index_tx_table_from_manifest_stats(spark, tmp_path_factory):
-    """With manifest-carried stats covering every file+column, the index
-    frame comes straight off the manifest (no table scan) and prunes
-    identically to the scan-built index."""
-    from pyspark.sql import functions as F
-
-    from indra_db_spark.plans.skipindex import (
-        build_file_index,
-        index_tx_table,
-        skip_scan,
-    )
-    from indra_db_spark.plans.txlog import TxTable
-
+def test_manifest_stats_match_file_scan(spark, tmp_path_factory):
+    """The stats the manifest carries per file (row count, min, max)
+    equal a scan of each file, and skip_read prunes on them."""
     root = str(tmp_path_factory.mktemp("txstats") / "t")
-    t = TxTable(spark, root)
-    t.set_stats_columns("k")
-    t.append(
+    t = _stats_table(
+        spark, root,
         spark.range(0, 1_000)
         .select(F.col("id").alias("k"), (F.col("id") % 7).alias("g"))
-        .repartitionByRange(5, "k")
+        .repartitionByRange(5, "k"),
+        "k",
     )
-    version, idx = index_tx_table(t, "k")
-    scan_idx = build_file_index(
-        spark, [f"{root}/data/{n}" for n in t.snapshot()[1]], "k"
-    )
-    a = {
-        r["file"]: (r["n_rows"], r["k_min"], r["k_max"])
-        for r in idx.collect()
+    stats = t._stats_of(t._read_version(t.snapshot()[0]))
+    scanned = {
+        r.f.rsplit("/", 1)[-1]: (r.n, [r.lo, r.hi])
+        for r in t.read()
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("k").alias("lo"),
+            F.max("k").alias("hi"),
+        )
+        .collect()
     }
-    b = {
-        r["file"]: (r["n_rows"], r["k_min"], r["k_max"])
-        for r in scan_idx.collect()
-    }
-    # exact-key parity: manifest-built and scan-built indexes must be
-    # interchangeable (extend_file_index joins on "file")
-    assert a == b
-    out, n_read, n_total = skip_scan(
-        spark, idx, predicates={"k": (100, 220)}
-    )
+    assert {f: (st["n"], st["c"]["k"]) for f, st in stats.items()} == scanned
+    out, n_read, n_total = t.skip_read(predicates={"k": (100, 220)})
     assert n_read < n_total == 5
     assert {r.k for r in out.collect()} == set(range(100, 221))
-    # a bloom request (not manifest-carried) still takes the scan path
-    _, idx_bloom = index_tx_table(t, "k", bloom_cols=("k",))
-    assert "k_bloom" in idx_bloom.columns
 
 
-# ---- round 11: all-NULL stats + mixed-type manifest stats ------------------
-
-
-def test_skip_scan_all_null_stats_file_pruned(spark, tmp_path_factory):
-    """A file whose stats column is entirely NULL records None min/max in
-    the index; skip_scan must PRUNE it (NULL never satisfies a
-    between/eq predicate) instead of raising TypeError on None >= int
-    (r10 verdict finding #1)."""
-    root = tmp_path_factory.mktemp("nullstats")
-    spark.createDataFrame([(1, 10), (2, 20)], "k int, v int").coalesce(
-        1
-    ).write.parquet(str(root / "a"))
-    spark.createDataFrame(
-        [(3, None), (4, None)], "k int, v int"
-    ).coalesce(1).write.parquet(str(root / "b"))
-    idx = build_file_index(
-        spark, [str(root / "a"), str(root / "b")], "v"
-    )
-    out, n_read, n_total = skip_scan(
-        spark, idx, predicates={"v": (5, 25)}
-    )
-    assert n_total == 2 and n_read == 1
-    assert {r.k for r in out.collect()} == {1, 2}
-
-
-def test_skip_scan_manifest_all_null_file_pruned(spark, tmp_path_factory):
-    """Same guard through the manifest-sourced index form: a txlog file
-    with an all-NULL stats column carries [None, None] and must be
-    pruned, not crash the driver-side filter."""
-    from indra_db_spark.plans.skipindex import index_tx_table
-    from indra_db_spark.plans.txlog import TxTable
-
-    root = str(tmp_path_factory.mktemp("txnull") / "t")
+def _all_null_stats_table(spark, root):
+    """Two single-file appends on stats column ``v``: file one holds
+    v in {10, 20}, file two holds only NULL v."""
     t = TxTable(spark, root)
     t.set_stats_columns("v")
     t.append(
@@ -361,22 +284,45 @@ def test_skip_scan_manifest_all_null_file_pruned(spark, tmp_path_factory):
         spark.createDataFrame([(3, None), (4, None)], "k int, v int")
         .coalesce(1)
     )
-    _, idx = index_tx_table(t, "v")
-    out, n_read, n_total = skip_scan(
-        spark, idx, predicates={"v": (5, 25)}
+    return t
+
+
+def test_skip_scan_all_null_stats_file_pruned(spark, tmp_path_factory):
+    """A file whose stats column is entirely NULL is PRUNED by a bounded
+    box (NULL never satisfies a between predicate) instead of crashing
+    the driver-side comparison of None with an int bound."""
+    t = _all_null_stats_table(
+        spark, str(tmp_path_factory.mktemp("nullstats") / "t")
     )
+    out, n_read, n_total = t.skip_read(predicates={"v": (5, 25)})
     assert n_total == 2 and n_read == 1
     assert {r.k for r in out.collect()} == {1, 2}
 
 
-def test_index_tx_table_mixed_type_stats_fall_back(spark, tmp_path_factory):
-    """One file carrying a _json_safe-STRINGIFIED legacy stat next to
-    native numerics must route index_tx_table to the rescan fallback
-    (createDataFrame would crash merging str with int), and the fallback
-    index still prunes correctly (r10 ADVICE #3)."""
-    from indra_db_spark.plans.skipindex import index_tx_table
-    from indra_db_spark.plans.txlog import TxTable
+def test_skip_scan_manifest_all_null_file_pruned(spark, tmp_path_factory):
+    """The manifest entry of an all-NULL stats column is [None, None],
+    and min/max point lookups (a single value or an IN-list) prune that
+    file the way a bounded box does: no crash, exact rows."""
+    root = str(tmp_path_factory.mktemp("txnull") / "t")
+    t = _all_null_stats_table(spark, root)
+    stats = t._stats_of(t._read_version(t.snapshot()[0]))
+    assert sorted(
+        (st["c"]["v"] for st in stats.values()), key=str
+    ) == [[10, 20], [None, None]]
+    out, n_read, n_total = t.skip_read(eq={"v": 20})
+    assert n_total == 2 and n_read == 1
+    assert [r.k for r in out.collect()] == [2]
+    out, n_read, _ = t.skip_read(eq={"v": [10, 15]})
+    assert n_read == 1
+    assert [r.k for r in out.collect()] == [1]
 
+
+def test_skip_read_mixed_type_stats_admit_not_crash(
+    spark, tmp_path_factory
+):
+    """One file carrying a STRINGIFIED legacy stat next to native
+    numerics cannot be compared with an int bound: skip_read admits that
+    file unpruned (never crashes, never mis-prunes) and stays exact."""
     root = str(tmp_path_factory.mktemp("txmixed") / "t")
     t = TxTable(spark, root)
     t.set_stats_columns("v")
@@ -390,164 +336,89 @@ def test_index_tx_table_mixed_type_stats_fall_back(spark, tmp_path_factory):
     )
     real = t._stats_of(t._read_version(t.snapshot()[0]))
     doctored = {f: dict(st) for f, st in real.items()}
-    legacy = sorted(doctored)[0]
-    doctored[legacy] = {
-        "n": real[legacy]["n"],
-        "c": {"v": [str(real[legacy]["c"]["v"][0]),
-                    str(real[legacy]["c"]["v"][1])]},
-    }
+    # the file the box would prune, had its stat stayed native
+    legacy = next(f for f, st in real.items() if st["c"]["v"] == [10, 20])
+    doctored[legacy] = {"n": real[legacy]["n"], "c": {"v": ["10", "20"]}}
     t._stats_of = lambda body: doctored  # forge a legacy mixed manifest
-    _, idx = index_tx_table(t, "v")      # must not crash: rescan fallback
-    out, n_read, n_total = skip_scan(
-        spark, idx, predicates={"v": (85, 100)}
-    )
-    assert n_total == 2 and n_read == 1
+    out, n_read, n_total = t.skip_read(predicates={"v": (85, 100)})
+    assert n_total == 2 and n_read == 2
     assert {r.k for r in out.collect()} == {3, 4}
 
 
-def test_index_tx_table_manifest_blooms_zero_scan(
-    spark, tmp_path_factory, monkeypatch
-):
-    """When the manifest packs bloom words for the requested bloom_cols,
-    index_tx_table assembles the bloom index driver-side — the rescan
-    path must never run (r10 verdict next-round #2); skip_scan probes
-    with the table's recorded m/k."""
-    import indra_db_spark.plans.skipindex as si
-    from indra_db_spark.plans.txlog import TxTable
-
-    root = str(tmp_path_factory.mktemp("txbloom") / "t")
-    t = TxTable(spark, root)
-    t.set_stats_columns("k", bloom=("g",))
-    for lo in (0, 1000):
-        t.append(
-            spark.range(lo, lo + 1000)
-            .select(
-                F.col("id").alias("k"),
-                (F.col("id") / 10).cast("long").alias("g"),
-            )
-            .coalesce(1)
-        )
-    monkeypatch.setattr(
-        si,
-        "build_file_index",
-        lambda *a, **kw: pytest.fail("bloom index rescanned the table"),
-    )
-    version, idx = si.index_tx_table(t, "k", bloom_cols=("g",))
-    assert "g_bloom" in idx.columns and "k_min" in idx.columns
-    cols, m, k = t.bloom_spec()
-    assert cols == ("g",)
-    out, n_read, n_total = si.skip_scan(
-        spark, idx, eq={"g": 150}, bloom_m=m, bloom_k=k
-    )
-    assert n_total == 2 and n_read == 1
-    assert {r.k for r in out.collect()} == set(range(1500, 1510))
-    # proof of absence: a g value in neither file prunes both
-    _, n0, _ = si.skip_scan(
-        spark, idx, eq={"g": 10_000}, bloom_m=m, bloom_k=k
-    )
-    assert n0 == 0
-
-
-def test_index_tx_table_shifting_bloom_mk_falls_back(
+def test_skip_read_probes_each_file_under_its_own_bloom_budget(
     spark, tmp_path_factory
 ):
-    """Bloom words packed under DIFFERENT m/k across files cannot be
-    probed soundly — index_tx_table must take the rescan fallback, not
-    return a silently wrong index."""
-    import indra_db_spark.plans.skipindex as si
-    from indra_db_spark.plans.txlog import TxTable
-
+    """Re-configuring the bloom budget leaves older files' words packed
+    under the old m/k; every manifest entry records its own [m, k], so
+    skip_read probes each file under the budget its words were packed
+    with and prunes soundly across the mix."""
     root = str(tmp_path_factory.mktemp("txmk") / "t")
     t = TxTable(spark, root)
     t.set_stats_columns("k", bloom=("k",))
-    t.append(
-        spark.createDataFrame([(1,), (2,)], "k int").coalesce(1)
-    )
-    t.append(
-        spark.createDataFrame([(3,), (4,)], "k int").coalesce(1)
-    )
-    real = t._stats_of(t._read_version(t.snapshot()[0]))
-    doctored = {
-        f: {**st, "b": {"k": [st["b"]["k"][0], st["b"]["k"][1],
-                              dict(st["b"]["k"][2]),
-                              *st["b"]["k"][3:]]}}
-        for f, st in real.items()
-    }
-    first = sorted(doctored)[0]
-    doctored[first]["b"]["k"][0] = 4096  # legacy budget on one file
-    t._stats_of = lambda body: doctored
-    _, idx = si.index_tx_table(t, "k", bloom_cols=("k",))
-    # the fallback re-packs by rescan UNDER THE TABLE'S RECORDED m/k, so
-    # the probe contract ("hash with tx.bloom_spec()") holds on every
-    # path — including this one
-    _, m, k = t.bloom_spec()
-    out, n_read, n_total = si.skip_scan(
-        spark, idx, eq={"k": 3}, bloom_m=m, bloom_k=k
-    )
-    assert n_total == 2 and n_read == 1
-    assert {r.k for r in out.collect()} == {3}
+    t.append(spark.createDataFrame([(1,), (2,)], "k int").coalesce(1))
+    t.set_stats_columns("k", bloom=("k",), bloom_m=4096, bloom_k=2)
+    t.append(spark.createDataFrame([(3,), (4,)], "k int").coalesce(1))
+    stats = t._stats_of(t._read_version(t.snapshot()[0]))
+    assert sorted(st["b"]["k"][:2] for st in stats.values()) == [
+        [4096, 2], [8192, 3],
+    ]
+    for k in (1, 3):
+        out, n_read, n_total = t.skip_read(eq={"k": k})
+        assert n_total == 2 and n_read == 1
+        assert [r.k for r in out.collect()] == [k]
 
 
 def test_bloom_index_all_null_file_kept_and_mixed_budgets(
     spark, tmp_path_factory
 ):
-    """(a) A file whose BLOOM column is entirely NULL keeps its index
-    row (left join): range queries on other columns must still see it —
-    the old inner join silently dropped the file from the index, losing
-    its rows for every skip_scan; eq probes prune it via the null map.
-    (b) Bloom budgets ride per row (<c>_bloom_m/_k), so an
-    extend_file_index under a DIFFERENT m/k still probes every row
-    under the budget its words were packed with."""
-    from indra_db_spark.plans.skipindex import extend_file_index
-
-    root = tmp_path_factory.mktemp("bloomnull")
-    spark.createDataFrame(
-        [(1, "a"), (2, "a")], "k int, g string"
-    ).coalesce(1).write.parquet(str(root / "f1"))
-    spark.createDataFrame(
-        [(3, None), (4, None)], "k int, g string"
-    ).coalesce(1).write.parquet(str(root / "f2"))
-    idx = build_file_index(
-        spark, [str(root / "f1"), str(root / "f2")], "k",
-        bloom_cols=("g",),
+    """(a) A file whose BLOOM column is entirely NULL carries an empty
+    word map: eq probes prune it (proof of absence), while range
+    predicates on other columns still read it — its rows are never lost.
+    The same holds when the bloom column is NULL in every file.
+    (b) After a bloom budget change the manifest mixes budgets, and eq
+    probes still find present values and prove absent ones.  (The
+    bloom column NULL in every file is its own test below.)"""
+    root = str(tmp_path_factory.mktemp("bloomnull") / "t")
+    t = TxTable(spark, root)
+    t.set_stats_columns("k", bloom=("g",))
+    t.append(
+        spark.createDataFrame([(1, "a"), (2, "a")], "k int, g string")
+        .coalesce(1)
     )
-    assert idx.count() == 2                       # all-NULL file kept
-    out, n_read, n_total = skip_scan(spark, idx, predicates={"k": (3, 4)})
+    t.append(
+        spark.createDataFrame([(3, None), (4, None)], "k int, g string")
+        .coalesce(1)
+    )
+    out, n_read, n_total = t.skip_read(predicates={"k": (3, 4)})
     assert n_total == 2 and n_read == 1
     assert {r.k for r in out.collect()} == {3, 4}  # its rows still served
-    out2, n2, _ = skip_scan(spark, idx, eq={"g": "a"})
+    out2, n2, _ = t.skip_read(eq={"g": "a"})
     assert n2 == 1 and {r.k for r in out2.collect()} == {1, 2}
-    spark.createDataFrame(
-        [(5, "z"), (6, "z")], "k int, g string"
-    ).coalesce(1).write.parquet(str(root / "f3"))
-    idx2 = extend_file_index(
-        spark, idx, [str(root / "f3")], "k",
-        bloom_cols=("g",), bloom_m=4096, bloom_k=2,
+
+    t.set_stats_columns("k", bloom=("g",), bloom_m=4096, bloom_k=2)
+    t.append(
+        spark.createDataFrame([(5, "z"), (6, "z")], "k int, g string")
+        .coalesce(1)
     )
-    out3, n3, t3 = skip_scan(spark, idx2, eq={"g": "z"})
+    out3, n3, t3 = t.skip_read(eq={"g": "z"})
     assert t3 == 3 and n3 == 1
     assert {r.k for r in out3.collect()} == {5, 6}
-    # proof of absence survives the mixed-budget union
-    _, n4, _ = skip_scan(spark, idx2, eq={"g": "absent"})
-    assert n4 == 0
+    # proof of absence survives the mixed budgets: the schema carrier only
+    out4, n4, _ = t.skip_read(eq={"g": "absent"})
+    assert n4 == 1 and out4.count() == 0
 
 
 def test_index_tx_table_all_null_bloom_stays_zero_scan(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory
 ):
     """A bloom column with ZERO words in every file (all-NULL column) is
-    a valid always-miss filter; with min/max manifest-carried the index
-    must still assemble driver-side under the explicit schema — the old
-    inference-based path had no map type to infer and fell back to a
-    FULL table rescan (r11 ADVICE #2)."""
-    import indra_db_spark.plans.skipindex as si
-    from indra_db_spark.plans.txlog import TxTable
-
-    root = str(tmp_path_factory.mktemp("txnullbloom") / "t")
-    t = TxTable(spark, root)
-    t.set_stats_columns("k", bloom=("g",))
+    a valid always-miss filter: an eq probe reads no data file (only the
+    schema carrier), while range pruning on the carried min/max of
+    another column still works."""
+    nt = TxTable(spark, str(tmp_path_factory.mktemp("txnullbloom") / "t"))
+    nt.set_stats_columns("k", bloom=("g",))
     for lo in (0, 100):
-        t.append(
+        nt.append(
             spark.range(lo, lo + 100)
             .select(
                 F.col("id").alias("k"),
@@ -555,22 +426,11 @@ def test_index_tx_table_all_null_bloom_stays_zero_scan(
             )
             .coalesce(1)
         )
-    monkeypatch.setattr(
-        si,
-        "build_file_index",
-        lambda *a, **kw: pytest.fail(
-            "all-NULL bloom column forced a table rescan"
-        ),
-    )
-    _, idx = si.index_tx_table(t, "k", bloom_cols=("g",))
-    assert idx.count() == 2
-    # the empty maps prove absence for every eq probe...
-    _, n0, t0 = si.skip_scan(spark, idx, eq={"g": "anything"})
-    assert (n0, t0) == (0, 2)
-    # ...while range pruning on the carried min/max still works
-    out, n1, _ = si.skip_scan(spark, idx, predicates={"k": (120, 150)})
-    assert n1 == 1
-    assert {r.k for r in out.collect()} == set(range(120, 151))
+    out5, n5, t5 = nt.skip_read(eq={"g": "anything"})
+    assert (n5, t5) == (1, 2) and out5.count() == 0
+    out6, n6, _ = nt.skip_read(predicates={"k": (120, 150)})
+    assert n6 == 1
+    assert {r.k for r in out6.collect()} == set(range(120, 151))
 
 
 def test_bloom_positions_sql_python_parity(spark):

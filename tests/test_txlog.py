@@ -547,6 +547,7 @@ def test_optimize_zorders_and_prunes(spark, tmp_path):
     from pyspark.sql import functions as F2
 
     t = TxTable(spark, str(tmp_path / "t"))
+    t.set_stats_columns("x", "y")
     # 2-D grid written in a deliberately clustering-hostile order
     grid = (
         spark.range(4096)
@@ -559,17 +560,14 @@ def test_optimize_zorders_and_prunes(spark, tmp_path):
     )
     t.append(grid)
     v = t.optimize("x", "y", n_files=16)
-    assert v == 2
+    assert v == 3
     assert t.read().count() == 4096
     # same rows, new layout
-    assert t.read().exceptAll(t.read(1)).count() == 0
+    assert t.read().exceptAll(t.read(2)).count() == 0
 
     # the bought property: a box predicate prunes most files
-    from indra_db_spark.plans.skipindex import index_tx_table, skip_scan
-
-    _, idx = index_tx_table(t, "x", "y")
-    result, files_read, files_total = skip_scan(
-        spark, idx, predicates={"x": (0, 7), "y": (0, 7)}
+    result, files_read, files_total = t.skip_read(
+        predicates={"x": (0, 7), "y": (0, 7)}
     )
     assert result.count() == 64  # parity with the predicate's true rows
     assert files_total >= 8 and files_read < files_total / 2  # real pruning
@@ -1266,9 +1264,22 @@ def test_catalog_dv_read_entry_commit_sequence(spark, sf_dir, monkeypatch):
 
 
 @pytest.fixture()
-def s3_bucket():
+def s3_bucket(monkeypatch):
     boto3 = pytest.importorskip("boto3")
     moto = pytest.importorskip("moto")
+    from moto.s3.responses import S3Response
+
+    # moto checks If-None-Match with one backend call and stores the
+    # object with another, with no lock between them, so two racing
+    # conditional PUTs can both win.  S3 arbitrates a conditional PUT
+    # atomically; serialize the emulator's handler to match.
+    put, lock = S3Response.put_object, threading.Lock()
+
+    def atomic_put(self):
+        with lock:
+            return put(self)
+
+    monkeypatch.setattr(S3Response, "put_object", atomic_put)
     with moto.mock_aws():
         client = boto3.client("s3", region_name="us-east-1")
         client.create_bucket(Bucket="tx-test-bucket")
@@ -2848,37 +2859,6 @@ def test_segment_meta_drops_untagged_bloom_words(spark):
     }
     meta2 = TxTable._segment_meta(["fa", "fb"], mixed)
     assert "b" not in meta2
-
-
-def test_index_tx_table_rescans_untagged_blooms(spark, tmp_path):
-    """index_tx_table's zero-scan fast path must not hand untagged
-    manifest words to skip_scan's probes; it routes to the rescan,
-    which re-packs the words under the CURRENT scheme — pruning stays
-    both engaged and sound."""
-    from indra_db_spark.plans import skipindex as si
-
-    t = TxTable(spark, str(tmp_path / "t"))
-    t.set_stats_columns("k", bloom=("k",))
-    t.append(
-        spark.createDataFrame([(1,), (2,)], "k int").coalesce(1)
-    )
-    t.append(
-        spark.createDataFrame([(3,), (4,)], "k int").coalesce(1)
-    )
-    real = t._stats_of(t._read_version(t.snapshot()[0]))
-    legacy = {
-        f: {**st, "b": {"k": st["b"]["k"][:3]}}  # strip the tag
-        for f, st in real.items()
-    }
-    t._stats_of = lambda body: legacy
-    _, idx = si.index_tx_table(t, "k", bloom_cols=("k",))
-    _, m, k = t.bloom_spec()
-    out, n_read, n_total = si.skip_scan(
-        spark, idx, eq={"k": 3}, bloom_m=m, bloom_k=k
-    )
-    # the rescan rebuilt scheme-correct words: still prunes, never wrong
-    assert n_total == 2 and n_read == 1
-    assert [r.k for r in out.collect()] == [3]
 
 
 class _CountingFs:

@@ -1,14 +1,15 @@
-"""Measure txlog-snapshot serving + skipping-index file pruning on the
+"""Measure txlog-snapshot serving + manifest-stats file pruning on the
 query algebra's own tables (r7 verdict #8): amplify the fixture lake's
-name_meta, commit it to a TxTable, OPTIMIZE (z-order mk_hash × ev_count),
-build the snapshot-consistent skipping index, and compare a selective
-hash-range probe through skip_scan against the full snapshot scan —
-files read, wall time, and result parity.  Results land in SCALING.md §1c.
+name_meta, commit it to a TxTable with manifest stats on mk_hash and
+ev_count, OPTIMIZE (z-order mk_hash × ev_count), and compare a selective
+hash-range probe through ``TxTable.skip_read`` against the full snapshot
+scan — files read, wall time, and result parity.  Results land in
+SCALING.md §1c.
 
 The probe is the algebra's hot shape: HasHash / FromPapers resolve to
 selective mk_hash predicates over name_meta, which the reference serves
-with a clustered btree (readonly_schema.py:635-637); here layout + index
-stand in for the btree.
+with a clustered btree (readonly_schema.py:635-637); here layout +
+manifest stats stand in for the btree.
 
 Usage:  PYTHONPATH=. python tools/txlog_algebra_bench.py [factor]
 """
@@ -45,7 +46,6 @@ def amplified_rows(spark, factor: int):
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 200
 
-    from indra_db_spark.plans.skipindex import index_tx_table, skip_scan
     from indra_db_spark.plans.txlog import TxTable
     from indra_db_spark.session import get_spark
 
@@ -55,12 +55,10 @@ def main() -> None:
 
     root = tempfile.mkdtemp(prefix="txalg_") + "/name_meta"
     t = TxTable(spark, root)
+    t.set_stats_columns("mk_hash", "ev_count")
     t.append(nm)
     n_files = spark.sparkContext.defaultParallelism
     v = t.optimize("mk_hash", "ev_count", n_files=n_files)
-    version, idx = index_tx_table(t, "mk_hash", "ev_count")
-    idx = idx.cache()
-    idx.count()
     print(f"factor={factor} rows={t.read().count()} files={n_files} v={v}")
 
     full = t.read()
@@ -78,8 +76,8 @@ def main() -> None:
             times.append(time.monotonic() - t0)
         return n, min(times)
 
-    got, files_read, files_total = skip_scan(
-        spark, idx, predicates={"mk_hash": (lo, hi)}
+    got, files_read, files_total = t.skip_read(
+        predicates={"mk_hash": (lo, hi)}
     )
     n_skip, t_skip = timed(got)
     n_full, t_full = timed(full.filter(full.mk_hash.between(lo, hi)))
@@ -93,8 +91,8 @@ def main() -> None:
     # second dimension: a top-evidence slice (ranked reads) — z-order keeps
     # BOTH dimensions skippable from one layout
     ev_hi = full.agg({"ev_count": "max"}).first()[0]
-    got2, fr2, ft2 = skip_scan(
-        spark, idx, predicates={"ev_count": (max(1, ev_hi - 1), ev_hi)}
+    got2, fr2, ft2 = t.skip_read(
+        predicates={"ev_count": (max(1, ev_hi - 1), ev_hi)}
     )
     n2, t2 = timed(got2)
     nf2, tf2 = timed(
