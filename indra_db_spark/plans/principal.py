@@ -110,48 +110,95 @@ class CurationStore:
     """The curation WRITE path (reference: client/principal/curation.py:17-82
     submit_curation + principal_schema.py:949-1006).
 
-    Curations are tiny OLTP events in a lakehouse engine, so the store is an
-    append-only log: submissions accumulate driver-side and flush as small
-    parquet appends; reads union the persisted log with the unflushed tail.
-    On a cluster the parquet root is the shared object-store path and a
-    nightly compaction folds the small files (standard lakehouse hygiene —
-    no per-row table mutation anywhere).
+    With a ``path`` the store is one transaction-logged table
+    (:class:`~indra_db_spark.plans.txlog.TxTable`) rooted there, and every
+    submit is one one-row append commit.  Its id is drawn from the
+    committed log: the largest id at the version the writer has read,
+    plus one, committed as exactly the next version
+    (:meth:`TxTable.append_at`).  A writer that loses that version to
+    another store on the same root folds the winner's commits in and
+    re-stages with the next id, so no two stores ever share an id, and a
+    submit whose commit fails persists nothing and consumes no id.
+
+    Counts are served from memory: ``{pa_hash: n}`` and the largest id
+    are built at open from one read of (id, pa_hash), bumped by this
+    store's own commits, and folded forward from other writers' appends
+    through :meth:`TxTable.changes` (a full re-read when the range holds
+    commits ``changes`` cannot attribute, e.g. after compaction plus
+    vacuum).  A :meth:`counts` read lists the log once and runs no Spark
+    job unless another writer committed; it never waits on a submit's
+    write, which holds only the submit lock.
+
+    Without a ``path`` the store keeps its rows in memory.
     """
 
     def __init__(self, spark, path: str | None = None):
         import threading
 
+        from indra_db_spark.plans.txlog import TxTable
+
         self.spark = spark
         self.path = path
-        self._pending: list[dict] = []
-        # the REST layer serves submits from ThreadingHTTPServer threads:
-        # id assignment, the pending tail, and flush share one lock so
-        # concurrent submissions can neither mint duplicate ids nor lose a
-        # row appended between another thread's flush build and clear
+        self._table = None if path is None else TxTable(spark, path)
+        self._rows: list[dict] = []  # the in-memory store's curations
+        # submits serialize on _lock across their Spark write; the counts,
+        # the largest id and the version they reflect change only under
+        # _fold_lock, which no write holds
         self._lock = threading.Lock()
-        self._next_id = self._persisted_count() + 1
+        self._fold_lock = threading.Lock()
+        self._counts: dict[int, int] = {}
+        self._max_id = 0
+        self._version = 0
+        if self._table is not None:
+            self._fold()
 
-    def _persisted(self) -> DataFrame | None:
-        """The flushed log, or None while nothing was ever flushed (its
-        path does not exist yet).  Every other read failure propagates:
-        a log that cannot be read must not read as empty, or ids would
-        restart at 1 and counts and lists come out silently wrong."""
-        from pyspark.errors import AnalysisException
+    def _fold(self) -> int:
+        """Bring the counts up to the log's latest version (one listing;
+        a Spark job only when other writers committed); returns it."""
+        vs = self._table._versions()
+        hi = vs[-1] if vs else 0
+        with self._fold_lock:
+            lo = self._version
+            if hi <= lo:
+                return lo
+            counts, max_id, rows = dict(self._counts), self._max_id, None
+            if lo:
+                try:
+                    rows = (
+                        self._table.changes(lo, hi)
+                        .select("id", "pa_hash")
+                        .collect()
+                    )
+                except Exception:  # noqa: BLE001 — a real fault re-raises below
+                    rows = None
+            if rows is None:
+                counts, max_id = {}, 0
+                rows = self._read(hi).select("id", "pa_hash").collect()
+            for r in rows:
+                counts[r.pa_hash] = counts.get(r.pa_hash, 0) + 1
+                max_id = max(max_id, r.id)
+            self._counts, self._max_id, self._version = counts, max_id, hi
+            return hi
 
+    def _read(self, version: int) -> DataFrame:
+        """The table at ``version``; empty at version 0 (nothing committed)."""
+        return self._table.read(version) if version else self._local([])
+
+    def _local(self, rows: list[dict]) -> DataFrame:
         from indra_db_spark.schemas import CURATION_SCHEMA
+        from indra_db_spark.session import local_artifact_df
 
-        if self.path is None:
-            return None
-        try:
-            return self.spark.read.schema(CURATION_SCHEMA).parquet(self.path)
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
+        return local_artifact_df(self.spark, rows, CURATION_SCHEMA)
 
-    def _persisted_count(self) -> int:
-        persisted = self._persisted()
-        return 0 if persisted is None else persisted.count()
+    def _add(self, version: int, row: dict) -> None:
+        """Count this store's own commit ``row`` at ``version`` — unless
+        a concurrent :meth:`_fold` already read it from the log."""
+        with self._fold_lock:
+            if self._version == version - 1:
+                h = row["pa_hash"]
+                self._counts[h] = self._counts.get(h, 0) + 1
+                self._max_id = max(self._max_id, row["id"])
+                self._version = version
 
     def submit(
         self,
@@ -189,52 +236,46 @@ class CurationStore:
                 raise BadHashError(hash_val)
             if pa_json is None:
                 pa_json = _json.loads(bytes(hit[0].json).decode())
+        row = {
+            "pa_hash": hash_val,
+            "source_hash": int(ev_hash) if ev_hash is not None else None,
+            "tag": tag,
+            "curator": curator,
+            "text": text,
+            "ip": ip,
+            "source": source,
+            "date": date or _dt.datetime.utcnow().isoformat(timespec="seconds"),
+            "pa_json": _json.dumps(pa_json).encode() if pa_json else None,
+            "ev_json": _json.dumps(ev_json).encode() if ev_json else None,
+        }
         with self._lock:
-            row = {
-                "id": self._next_id,
-                "pa_hash": hash_val,
-                "source_hash": int(ev_hash) if ev_hash is not None else None,
-                "tag": tag,
-                "curator": curator,
-                "text": text,
-                "ip": ip,
-                "source": source,
-                "date": date
-                or _dt.datetime.utcnow().isoformat(timespec="seconds"),
-                "pa_json": _json.dumps(pa_json).encode() if pa_json else None,
-                "ev_json": _json.dumps(ev_json).encode() if ev_json else None,
+            if self._table is None:
+                row["id"] = self._max_id + 1
+                self._rows.append(row)
+                self._add(self._version + 1, row)
+                return row["id"]
+            for _ in range(20):
+                self._fold()
+                with self._fold_lock:
+                    version, row["id"] = self._version + 1, self._max_id + 1
+                if self._table.append_at(self._local([row]), version):
+                    self._add(version, row)
+                    return row["id"]
+        raise RuntimeError("curation submit lost 20 commit races")
+
+    def counts(self, hashes) -> dict[int, int]:
+        """``{pa_hash: curations}`` for the curated hashes among
+        ``hashes``, from memory (see the class docstring)."""
+        if self._table is not None:
+            self._fold()
+        with self._fold_lock:
+            return {
+                h: self._counts[h] for h in map(int, hashes) if h in self._counts
             }
-            self._pending.append(row)
-            self._next_id += 1
-            if self.path is not None:
-                self._flush_locked()
-        return row["id"]
-
-    def flush(self) -> None:
-        """Append pending rows to the parquet log."""
-        with self._lock:
-            self._flush_locked()
-
-    def _flush_locked(self) -> None:
-        if not self._pending or self.path is None:
-            return
-        from indra_db_spark.schemas import CURATION_SCHEMA
-
-        from indra_db_spark.session import local_artifact_df
-
-        local_artifact_df(
-            self.spark, self._pending, CURATION_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(self.path)
-        self._pending.clear()
 
     def df(self) -> DataFrame:
-        """All curations: persisted log ∪ unflushed tail."""
-        from indra_db_spark.schemas import CURATION_SCHEMA
-
-        with self._lock:
-            pending = list(self._pending)
-        from indra_db_spark.session import local_artifact_df
-
-        tail = local_artifact_df(self.spark, pending, CURATION_SCHEMA)
-        persisted = self._persisted()
-        return tail if persisted is None else persisted.unionByName(tail)
+        """Every committed curation (the in-memory store's rows)."""
+        if self._table is None:
+            with self._lock:
+                return self._local(list(self._rows))
+        return self._read(self._fold())

@@ -1761,6 +1761,28 @@ class TxTable:
                 return base + 1
         raise RuntimeError(f"append lost {max_retries} commit races")
 
+    def append_at(self, df: DataFrame, version: int) -> bool:
+        """Commit ``df``'s rows as exactly ``version``; False, committing
+        nothing, unless ``version`` is the table's next one and this
+        writer claims it first.  For a writer
+        whose rows depend on the version they commit over (an id drawn
+        from the log): :meth:`append` rebases the same staged files onto
+        whatever version is next, so such a writer re-stages instead.  A
+        refused commit's staged files stay invisible garbage for
+        :func:`vacuum`."""
+        evolved = self._check_schema(df, merge_schema=False)
+        staged = self._stage(df)
+        if _pre_commit_hook is not None:
+            _pre_commit_hook(self)
+        base, files, txns, schema, cons, dv = self._snapshot_full()
+        if base != version - 1:
+            return False
+        self._check_constraints(df, cons, "append_at")
+        return self._try_claim(
+            version, files + staged, "append", txns,
+            self._union_schema_json(schema, evolved), cons, dv,
+        )
+
     def append_batch(
         self,
         df: DataFrame,

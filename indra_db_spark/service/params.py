@@ -154,6 +154,9 @@ def query_from_simple_json(d: dict) -> Query:
     query.py:880-908)."""
     if not isinstance(d, dict):
         raise WebQueryError(f"expected object, got {type(d).__name__}")
+    for op in ("and", "or"):
+        if op in d and not isinstance(d[op], list):
+            raise WebQueryError(f"{op!r} needs a list, got {type(d[op]).__name__}")
     if "and" in d:
         return build_intersection([query_from_simple_json(c) for c in d["and"]])
     if "or" in d:

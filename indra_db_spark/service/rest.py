@@ -57,7 +57,6 @@ from indra_db_spark.plans.principal import (
     BadHashError,
     CurationStore,
     anonymize_curators,
-    curation_counts,
     curations_for,
 )
 from indra_db_spark.plans.queries import FromAgentJson, FromMeshIds, FromPapers, HasHash
@@ -70,7 +69,6 @@ from indra_db_spark.plans.shaping import (
     get_relations,
     get_statements,
 )
-from indra_db_spark.plans.txlog import isin
 from indra_db_spark.service.params import (
     MAX_STMTS,
     WebQueryError,
@@ -101,6 +99,21 @@ def _web_params(qs: dict[str, list[str]]) -> dict:
             continue
         out[k] = vals if len(vals) > 1 else vals[0]
     return out
+
+
+def _field(body: dict, key: str, kind: type, items: tuple = ()):
+    """``body[key]``, None when absent; a 400 when it is not a ``kind``
+    or, for a list, holds an element that is none of ``items``.  A
+    caller's malformed field must not reach the engine as a TypeError,
+    which would be answered as an engine fault (a 500)."""
+    v = body.get(key)
+    if v is not None and (
+        not isinstance(v, kind)
+        or any(isinstance(x, bool) or not isinstance(x, items) for x in v if items)
+    ):
+        of = " of " + "/".join(t.__name__ for t in items) if items else ""
+        raise WebQueryError(f"{key!r} must be a {kind.__name__}{of}")
+    return v
 
 
 def _rows_json(df, limit):
@@ -195,17 +208,15 @@ def make_handler(
                 )
                 out = res.json()
                 # with_cur_counts: per-statement curation tallies ride the
-                # response (produce_response, call_handlers.py:356-362)
+                # response (produce_response, call_handlers.py:356-362),
+                # read from the store's in-memory counts: no Spark job
                 if (
                     qs.get("with_cur_counts", ["false"])[0] == "true"
                     and curation is not None
                 ):
-                    page_hashes = [int(h) for h in out["statements"]]
-                    counts = curation_counts(
-                        curation.df().filter(isin("pa_hash", page_hashes))
-                    ).collect()
                     out["num_curations"] = {
-                        str(r.pa_hash): r.curation_count for r in counts
+                        str(h): n
+                        for h, n in curation.counts(out["statements"]).items()
                     }
                 return out
             # with_english: typed English riding the response rows, the
@@ -506,24 +517,24 @@ def make_handler(
                     self._expand(body, qs)
                     return
                 if len(parts) == 2 and parts[0] == "query":
-                    query = query_from_simple_json(body["query"])
+                    query = query_from_simple_json(_field(body, "query", dict))
                     self._send(200, self._run(parts[1], query, None, qs))
                     return
                 if len(parts) == 2 and parts[1] == "from_hashes":
-                    hashes = body.get("hashes")
+                    hashes = _field(body, "hashes", list, (int, str))
                     if not hashes:
                         raise WebQueryError("no hashes given")
                     query = HasHash([int(h) for h in hashes])
                     self._send(200, self._run(parts[0], query, None, qs))
                     return
                 if len(parts) == 2 and parts[1] == "from_papers":
-                    ids = body.get("ids")
+                    ids = _field(body, "ids", list, (dict,))
                     if not ids:
                         raise WebQueryError("no paper IDs given")
                     papers = [(d["type"], d["id"]) for d in ids]
                     query = FromPapers(papers)
                     ev_filter = EvidenceFilter.from_papers(papers)
-                    mesh = body.get("mesh_ids") or []
+                    mesh = _field(body, "mesh_ids", list, (int, str)) or []
                     if mesh:
                         query = query & FromMeshIds(mesh)
                         ev_filter = EvidenceFilter.from_filters(
@@ -532,17 +543,19 @@ def make_handler(
                     self._send(200, self._run(parts[0], query, ev_filter, qs))
                     return
                 if len(parts) == 2 and parts[1] == "from_agent_json":
-                    agent_json = body.get("agent_json")
+                    agent_json = _field(body, "agent_json", dict)
                     if not agent_json:
                         raise WebQueryError("no agent_json given")
                     query = FromAgentJson(
-                        agent_json, body.get("stmt_type"), body.get("hashes")
+                        agent_json,
+                        _field(body, "stmt_type", str),
+                        _field(body, "hashes", list, (int, str)),
                     )
                     self._send(200, self._run(parts[0], query, None, qs))
                     return
                 if len(parts) == 2 and parts[1] == "from_simple_json":
-                    query = query_from_simple_json(body["query"])
-                    covered = body.get("complexes_covered")
+                    query = query_from_simple_json(_field(body, "query", dict))
+                    covered = _field(body, "complexes_covered", list, (int,))
                     self._send(
                         200,
                         self._run(
@@ -563,11 +576,13 @@ def make_handler(
             ``{"agent_json": ..., "stmt_type": ..., "hashes": [...]}``;
             medscan-only rows are censored for callers without the
             permission, like every other route."""
-            agent_json = body.get("agent_json")
+            agent_json = _field(body, "agent_json", dict)
             if not agent_json:
                 raise WebQueryError("no agent_json given")
-            stmt_type = body.get("stmt_type")
-            query = FromAgentJson(agent_json, stmt_type, body.get("hashes"))
+            stmt_type = _field(body, "stmt_type", str)
+            query = FromAgentJson(
+                agent_json, stmt_type, _field(body, "hashes", list, (int, str))
+            )
             # medscan-only statements censored at the query level (the
             # reference pops medscan counts and drops emptied entries,
             # api.py:460-470)

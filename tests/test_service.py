@@ -439,6 +439,53 @@ def test_rest_malformed_body_is_a_400():
         server.shutdown()
 
 
+def test_rest_malformed_fields_are_400s():
+    """A POST body field of the wrong JSON type is a caller error: a
+    JSON 400 naming the field, not a 500 with a logged traceback."""
+    import json
+    from urllib.error import HTTPError
+    from urllib.request import Request, urlopen
+
+    from indra_db_spark.service.rest import serve
+
+    server = serve(None)  # field checks run before any route reads the lake
+    host, port = server.server_address
+    ok_query = {"class": "HasAgent", "agent_id": "MEK"}
+    cases = (
+        ("/statements/from_papers", {"ids": [1]}, "ids"),
+        ("/statements/from_papers", {"ids": "pmid:1"}, "ids"),
+        ("/statements/from_hashes", {"hashes": 5}, "hashes"),
+        ("/statements/from_hashes", {"hashes": [[1]]}, "hashes"),
+        (
+            "/statements/from_papers",
+            {"ids": [{"type": "pmid", "id": "1"}], "mesh_ids": [{"D": 1}]},
+            "mesh_ids",
+        ),
+        ("/statements/from_agent_json", {"agent_json": 5}, "agent_json"),
+        ("/expand", {"agent_json": ["MEK"]}, "agent_json"),
+        ("/statements/from_simple_json", {"query": 5}, "query"),
+        ("/query/statements", {"query": {"and": 5}}, "and"),
+        (
+            "/agents/from_simple_json",
+            {"query": ok_query, "complexes_covered": [[1]]},
+            "complexes_covered",
+        ),
+    )
+    try:
+        for path, body, word in cases:
+            req = Request(
+                f"http://{host}:{port}{path}",
+                data=json.dumps(body).encode(),
+                headers={"Content-Type": "application/json"},
+            )
+            with pytest.raises(HTTPError) as e:
+                urlopen(req)
+            assert e.value.code == 400, (path, body)
+            assert word in json.load(e.value)["error"], (path, body)
+    finally:
+        server.shutdown()
+
+
 def test_rest_route_parity(spark):
     """The reference's full route surface (api.py:359-418 dispatch +
     curation endpoints api.py:570-639): every result type and method the
@@ -905,8 +952,8 @@ def test_rest_answers_engine_faults_with_500(spark, tmp_path):
 
 
 def test_curation_store_only_a_missing_log_reads_empty(spark, tmp_path):
-    """A store over a path nothing was flushed to starts ids at 1 and
-    lists nothing; a log that exists but cannot be read raises — at
+    """A store over a path nothing was committed to starts ids at 1 and
+    lists nothing; a committed data file that cannot be read raises — at
     open (ids must not restart at 1) and in ``df()`` (counts and lists
     must not come out silently empty) — and REST answers the list
     route with a JSON 500."""
@@ -923,7 +970,9 @@ def test_curation_store_only_a_missing_log_reads_empty(spark, tmp_path):
     assert store.submit(7, "correct", "alice@example.org", "::1") == 1
     assert store.submit(7, "grounding", "bob@example.org", "::1") == 2
 
-    (path / "part-99999-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    committed = sorted((path / "data").glob("*.parquet"))
+    assert len(committed) == 2
+    committed[0].write_bytes(b"not parquet")
     with pytest.raises(Exception):
         CurationStore(spark, str(path))
     with pytest.raises(Exception):
@@ -937,6 +986,152 @@ def test_curation_store_only_a_missing_log_reads_empty(spark, tmp_path):
         assert json.load(e.value)["error"]
     finally:
         server.shutdown()
+
+
+def test_curation_failed_submit_persists_nothing(spark, tmp_path, monkeypatch):
+    """A submit whose commit fails raises, and leaves no row in ``df()``
+    or ``counts()`` and no id consumed: the next submit takes the next
+    id, and a fresh store over the log sees only acknowledged rows."""
+    from indra_db_spark.plans import txlog
+    from indra_db_spark.plans.principal import CurationStore
+
+    path = str(tmp_path / "cur")
+    store = CurationStore(spark, path)
+    assert store.submit(7, "correct", "alice@example.org", "::1") == 1
+    fail = [True]
+
+    def hook(_table):
+        if fail.pop() if fail else False:
+            raise OSError("commit failed")
+
+    monkeypatch.setattr(txlog, "_pre_commit_hook", hook)
+    with pytest.raises(OSError):
+        store.submit(8, "incorrect", "bob@example.org", "::1")
+    assert store.submit(9, "grounding", "carol@example.org", "::1") == 2
+    for s in (store, CurationStore(spark, path)):
+        rows = sorted((r.id, r.pa_hash) for r in s.df().collect())
+        assert rows == [(1, 7), (2, 9)]
+        assert s.counts([7, 8, 9]) == {7: 1, 9: 1}
+
+
+def test_curation_stores_sharing_a_root_never_share_an_id(spark, tmp_path):
+    """Two stores on one root submitting from threads: every id is
+    unique, and each store's in-memory counts equal a group-by over
+    the committed table once it has folded the other's commits."""
+    import threading
+
+    from indra_db_spark.plans.principal import CurationStore
+
+    path = str(tmp_path / "cur")
+    stores = [CurationStore(spark, path), CurationStore(spark, path)]
+    acked: list[int] = []
+    errs: list[Exception] = []
+
+    def work(k):
+        try:
+            for i in range(3):
+                acked.append(
+                    stores[k % 2].submit(10 + (k + i) % 3, "correct", "a@b.c", "::1")
+                )
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    threads = [threading.Thread(target=work, args=(k,)) for k in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errs
+    assert sorted(acked) == list(range(1, 13))
+    for store in stores:
+        assert sorted(r.id for r in store.df().collect()) == sorted(acked)
+        want = {
+            r.pa_hash: r.curation_count
+            for r in curation_counts(store.df()).collect()
+        }
+        assert store.counts([10, 11, 12, 13]) == want
+        assert sum(want.values()) == 12
+
+
+def test_curation_counts_fold_past_compaction_and_vacuum(spark, tmp_path):
+    """A store whose folded version was vacuumed away (another writer
+    appended, compacted and vacuumed) re-reads the table in full: its
+    counts and next id stay right."""
+    from indra_db_spark.plans.principal import CurationStore
+    from indra_db_spark.plans.txlog import TxTable
+
+    path = str(tmp_path / "cur")
+    a, b = CurationStore(spark, path), CurationStore(spark, path)
+    assert a.submit(5, "correct", "a@b.c", "::1") == 1
+    assert b.submit(5, "correct", "b@b.c", "::1") == 2
+    assert b.submit(6, "correct", "b@b.c", "::1") == 3
+    table = TxTable(spark, path)
+    table.compact()
+    assert table.vacuum(keep_versions=1, min_age_ms=0)
+    assert a.counts([5, 6]) == {5: 2, 6: 1}
+    assert a.submit(6, "grounding", "a@b.c", "::1") == 4
+
+
+def test_curation_counts_run_no_spark_job(spark, tmp_path):
+    """``CurationStore.counts`` after this store's own submits runs no
+    Spark job; the group-by it replaces runs at least one under the
+    same probe."""
+    from indra_db_spark.plans.principal import CurationStore
+
+    store = CurationStore(spark, str(tmp_path / "cur"))
+    for h in (5, 5, 6):
+        store.submit(h, "correct", "a@b.c", "::1")
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    got, ids = jobs("counts-probe", lambda: store.counts([5, 6, 7]))
+    assert got == {5: 2, 6: 1} and list(ids) == []
+    old, ids = jobs(
+        "groupby-probe",
+        lambda: curation_counts(
+            store.df().filter("pa_hash IN (5, 6, 7)")
+        ).collect(),
+    )
+    assert {r.pa_hash: r.curation_count for r in old} == got and list(ids)
+
+
+def test_curation_counts_answer_while_a_submit_writes(spark, tmp_path, monkeypatch):
+    """A counts read answers while a submit of the same store is held
+    between its staged write and its commit, and sees that submit once
+    it commits."""
+    import threading
+
+    from indra_db_spark.plans import txlog
+    from indra_db_spark.plans.principal import CurationStore
+
+    store = CurationStore(spark, str(tmp_path / "cur"))
+    store.submit(5, "correct", "a@b.c", "::1")
+    entered, release = threading.Event(), threading.Event()
+
+    def hold(_table):
+        entered.set()
+        assert release.wait(120)
+
+    monkeypatch.setattr(txlog, "_pre_commit_hook", hold)
+    writer = threading.Thread(
+        target=store.submit, args=(5, "grounding", "b@b.c", "::1")
+    )
+    writer.start()
+    try:
+        assert entered.wait(120)
+        assert store.counts([5]) == {5: 1}
+        assert writer.is_alive()
+    finally:
+        release.set()
+        writer.join()
+    assert store.counts([5]) == {5: 2}
 
 
 def test_warm_server_compiles_no_code_per_request_key(spark, tmp_path):
